@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: times every SparkEntry query on SPARK_GRAFT_SF_DIR,
   * writes the complete record to BENCH_FULL.json, and prints ONLY a
@@ -235,18 +234,9 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bench")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Caches.quietCheckpointFreeWarnings()
+    val cpus = Sessions.envCpus(32)
+    val spark = Sessions.local("graft-bench", cpus, "WARN",
+      Sessions.Adaptive: _*)
     // machine-load indicator, stamped into the record: a run whose
     // loadavg was already high before the first query is suspect on its
     // face, independent of the ratio statistics below
@@ -378,8 +368,8 @@ object Bench {
     // an entirely missing file adopts this run's identity.
     val floorSf = floorFile.sf.getOrElse(
       if (floorFile.queries.isEmpty) sfDir else "/root/testdata/sf0.1")
-    val floorCpus = floorFile.cpus.getOrElse(cpus.toInt)
-    val floorIdentityOk = floorSf == sfDir && floorCpus == cpus.toInt
+    val floorCpus = floorFile.cpus.getOrElse(cpus)
+    val floorIdentityOk = floorSf == sfDir && floorCpus == cpus
     if (floorFile.corrupt)
       System.err.println(s"[bench] floor file $floorPath exists but parsed " +
         "to zero queries — corrupt or torn write; floor merge and ratio " +
@@ -404,7 +394,7 @@ object Bench {
         "\"" + k + "\":{\"min\":" + fmt(mn) + ",\"med\":" + fmt(md) +
           ",\"era\":" + era + "}"
       }.mkString(
-        s"""{"sf":"$sfDir","cpus":${cpus.toInt},"queries":{""", ",", "}}")
+        s"""{"sf":"$sfDir","cpus":$cpus,"queries":{""", ",", "}}")
       try java.nio.file.Files.writeString(
         java.nio.file.Paths.get(floorPath), floorJson + "\n")
       catch { case e: Throwable =>
@@ -429,7 +419,7 @@ object Bench {
         s""","floor_median_ratio":$floorStr,"floor_drift_suspect":$floorSuspect""" +
         s""","floor_median_ratio_same_era":$eraStr,"floor_same_era_n":$eraN""" +
         s""","loadavg_before":${fmt(loadBefore)},"loadavg_after":${fmt(loadAfter)}""" +
-        s""","load_suspect":${loadSuspect(loadBefore, cpus.toInt)}"""
+        s""","load_suspect":${loadSuspect(loadBefore, cpus)}"""
     }
     val fullJson =
       s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$qs,"failed":$failedJson,"sf":"$sfDir"$windowTag$envTag$filteredTag}"""

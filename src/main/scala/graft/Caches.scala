@@ -28,37 +28,6 @@ object Caches {
     df
   }
 
-  /** Session conf selecting the block storage level iterative operators
-    * use for their per-round `localCheckpoint`s (CC, star contraction,
-    * PageRank — the ops that pin one |V|-row copy per live round).
-    * Values: `memory_and_disk` (default — Spark's own localCheckpoint
-    * level), `memory_and_disk_ser` (serialized rows: ~5× smaller heap
-    * live-set, some ser/de CPU — the knob to turn when CC-heavy gates
-    * sharing a long-lived JVM breathe each other's storage out of the
-    * young gen, the r14 carryover-drift mechanism), `disk_only` (heap-
-    * free rounds; pays a disk round-trip per iteration). A probe knob:
-    * flip it per session and read the bench, no code change. */
-  val IterCheckpointLevelConf = "graft.iter.checkpointLevel"
-
-  /** `localCheckpoint` for an ITERATIVE operator's per-round state,
-    * honoring [[IterCheckpointLevelConf]]. */
-  def iterCheckpoint[T](df: Dataset[T], eager: Boolean): Dataset[T] = {
-    val level = df.sparkSession.conf
-      .getOption(IterCheckpointLevelConf).getOrElse("memory_and_disk") match {
-      case "disk_only" => org.apache.spark.storage.StorageLevel.DISK_ONLY
-      case "memory_and_disk_ser" =>
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER
-      case _ => org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    }
-    df.localCheckpoint(eager, level)
-  }
-
-  /** Chained form of [[iterCheckpoint]] for iterative call sites. */
-  implicit class IterCheckpointOps[T](private val ds: Dataset[T]) extends AnyVal {
-    def iterCheckpoint(eager: Boolean): Dataset[T] =
-      Caches.iterCheckpoint(ds, eager)
-  }
-
   /** Unpersist a `localCheckpoint`ed relation's blocks.
     *
     * `Dataset.unpersist` only consults the CacheManager (plan-level
@@ -75,18 +44,6 @@ object Caches {
       case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.unpersist(blocking)
       case _ => df.unpersist(blocking)
     }
-
-  /** Silence the by-design WARN Spark logs every time a
-    * locally-checkpointed RDD is unpersisted ("lineage has been
-    * truncated and cannot be recomputed") — [[freeCheckpoint]] only ever
-    * frees iterates that are provably dead, so the warning carries no
-    * information here and one line per freed round would bury the REAL
-    * warnings in Bench/Verify tails. Scoped to the one emitting logger,
-    * not a global level change. */
-  def quietCheckpointFreeWarnings(): Unit =
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.rdd.MapPartitionsRDD",
-      org.apache.logging.log4j.Level.ERROR)
 
   /** Unpersist every tracked relation and forget them. Checkpoint-aware:
     * tracked `localCheckpoint`s are freed at the RDD level (see

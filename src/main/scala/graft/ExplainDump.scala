@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 
 /** Plan-capture helper for the optimization rounds:
   * `runMain graft.ExplainDump <dir> <outDir> <suffix> <query...>` writes
@@ -22,18 +21,8 @@ object ExplainDump {
   def main(args: Array[String]): Unit = {
     val dir = args(0); val outDir = args(1); val suffix = args(2)
     val names = args.drop(3)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-explain")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    Caches.quietCheckpointFreeWarnings()
+    val spark = Sessions.local("graft-explain", Sessions.envCpus(32), "ERROR",
+      Sessions.Adaptive: _*)
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     names.foreach { name =>
       val df = SparkEntry.queries(name)(spark, dir)

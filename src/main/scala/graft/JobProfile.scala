@@ -3,7 +3,6 @@ package graft
 import scala.collection.mutable
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 /** Per-job wall-clock profiler for one gated query:
   * `runMain graft.JobProfile <dir> <query> [runs]` runs the query
@@ -30,29 +29,9 @@ object JobProfile {
     val dir = args(0)
     val name = args(1)
     val runs = if (args.length > 2) args(2).toInt else 2
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-jobprofile")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      // A/B knobs for guide-§2.2 experiments — DEFAULTS MATCH Bench's
-      // session exactly, so a plain profile measures what the bench
-      // measures. Both were tried on dd_soft_dedup_sweep (r17):
-      // parallelismFirst=false left the task count unchanged;
-      // canChangeCachedPlanOutputPartitioning=true cut tasks 7881→6455
-      // but wall time was flat-to-worse — small CPU-dense stages want
-      // parallelism-first coalescing, which is Spark's default.
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("SPARK_GRAFT_PARALLELISM_FIRST", "true"))
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_CACHED", "false"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    Caches.quietCheckpointFreeWarnings()
+    // Bench's session conf, so a profile measures what the bench does
+    val spark = Sessions.local("graft-jobprofile", Sessions.envCpus(32), "ERROR",
+      Sessions.Adaptive: _*)
 
     val jobs = mutable.ArrayBuffer.empty[JobRec]
     val byId = mutable.Map.empty[Int, JobRec]

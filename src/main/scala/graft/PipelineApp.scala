@@ -51,7 +51,10 @@ object PipelineApp {
     val streaming = args.contains("--streaming")
     val checkpoint = flagValue("--checkpoint")
     val positional = args.contains("--positional-union")
-    val repartition = flagValue("--repartition").map(_.toInt)
+    val repartition = flagValue("--repartition").map { v =>
+      v.toIntOption.filter(_ > 0).getOrElse(throw new IllegalArgumentException(
+        s"--repartition needs a positive integer, got '$v'"))
+    }
     val show = args.contains("--show")
 
     val meta = MetadataReader.read(metadataPath)

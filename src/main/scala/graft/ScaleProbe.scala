@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 
 /** Output-cardinality probe: `runMain graft.CountQuery <dir> <name...>`
   * prints each gated query's output row count on `dir`. Companion to
@@ -10,16 +9,8 @@ import org.apache.spark.sql.SparkSession
 object CountQuery {
   def main(args: Array[String]): Unit = {
     val dir = args(0)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    Caches.quietCheckpointFreeWarnings()
+    val spark = Sessions.local("graft-count", Sessions.envCpus(32), "ERROR",
+      "spark.sql.adaptive.enabled" -> "true")
     args.drop(1).foreach { name =>
       val n = try SparkEntry.queries(name)(spark, dir).count()
               finally Caches.releaseAll()
@@ -220,16 +211,8 @@ object ScaleProbe {
     val Array(dirSmall, dirBig) = args.take(2)
     val only = args.drop(2).toSet
     val selected = if (only.isEmpty) Probes else Probes.filter(only)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    Caches.quietCheckpointFreeWarnings()
+    val spark = Sessions.local("graft-scaleprobe", Sessions.envCpus(32), "ERROR",
+      "spark.sql.adaptive.enabled" -> "true")
 
     def timed(df: => org.apache.spark.sql.DataFrame): Double = {
       // release happens OUTSIDE the measured window — a blocking

@@ -96,11 +96,19 @@ final case class MatchesRegex(regex: String) extends ValidationRule { val ruleNa
 final case class MinLength(n: Int) extends ValidationRule { val ruleName = "minLength" }
 
 object ValidationRule {
+  /** Rejects a malformed argument here, naming the rule, rather than as
+    * a bare NumberFormatException or inside the first Spark job. */
   def parse(s: String): ValidationRule = s match {
     case "notEmpty" => NotEmpty
     case "notNull"  => NotNull
-    case other if other.startsWith("matchesRegex:") => MatchesRegex(other.stripPrefix("matchesRegex:"))
-    case other if other.startsWith("minLength:")    => MinLength(other.stripPrefix("minLength:").toInt)
+    case other if other.startsWith("matchesRegex:") =>
+      val re = other.stripPrefix("matchesRegex:")
+      try { java.util.regex.Pattern.compile(re); MatchesRegex(re) }
+      catch { case e: java.util.regex.PatternSyntaxException => throw new IllegalArgumentException(
+        s"validation rule '$other': invalid regex (${e.getDescription})", e) }
+    case other if other.startsWith("minLength:") =>
+      MinLength(other.stripPrefix("minLength:").toIntOption.filter(_ >= 0).getOrElse(
+        throw new IllegalArgumentException(s"validation rule '$other': minLength needs an integer >= 0")))
     case other => throw new IllegalArgumentException(
       s"unknown validation rule '$other' (supported: notEmpty, notNull, matchesRegex:<re>, minLength:<n>)")
   }

@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Caches.IterCheckpointOps
 import graft.functions.Portable
 import graft.sources.Tables
 
@@ -69,7 +68,7 @@ object Bpe {
     var vocab = wordDict(docs)
       .withColumn("syms",
         expr("transform(sequence(1, length(word)), i -> substring(word, i, 1))"))
-      .iterCheckpoint(true)
+      .localCheckpoint(true)
     // round k's collect materializes vocab_k, whose blocks are
     // self-contained — vocab_{k-1} (one behind, still needed until that
     // materialization) becomes dead then. Freed RDD-level: Dataset
@@ -97,7 +96,7 @@ object Bpe {
         val (l, r, n) = (top(0).getString(0), top(0).getString(1), top(0).getLong(2))
         merges += Merge(k + 1, l, r, n)
         vocab = vocab.withColumn("syms", applyMerge(col("syms"), l, r))
-          .iterCheckpoint(false)
+          .localCheckpoint(false)
         k += 1
       }
     }

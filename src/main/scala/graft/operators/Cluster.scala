@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Caches.IterCheckpointOps
 
 /** Connected components over near-dup pair relations — the step a
   * production dedup pipeline runs AFTER pair generation: verified pairs
@@ -41,12 +40,7 @@ import graft.Caches.IterCheckpointOps
   * constant-size. On a cluster with executor loss a reliable
   * `checkpoint()` (HDFS dir) is the drop-in durable variant; local
   * checkpoint is the right default for a deterministic batch job that
-  * simply reruns on failure. The block storage LEVEL of every round
-  * checkpoint is the session knob
-  * [[graft.Caches.IterCheckpointLevelConf]] — deserialized memory+disk
-  * by default, flip to serialized/disk-only when CC-heavy gates sharing
-  * one long-lived JVM breathe each other's storage out of the heap (the
-  * r14 carryover-drift mechanism). */
+  * simply reruns on failure. */
 object Cluster {
 
   /** Hard round cap — `require`-failed rather than silently returning
@@ -71,13 +65,13 @@ object Cluster {
   def connectedComponents(edges: DataFrame): DataFrame = {
     val sym = graft.Caches.track(edges.select(col("src"), col("dst"))
       .union(edges.select(col("dst").as("src"), col("src").as("dst")))
-      .iterCheckpoint(true))
+      .localCheckpoint(true))
     // Lazy checkpoints: labelSum is the action that materializes each
     // round's blocks, so a round costs ONE job (compute + cache + sum)
     // instead of an eager-checkpoint job plus the aggregate.
     var labels = sym.select(col("src").as("id")).distinct()
       .withColumn("cluster_id", col("id"))
-      .iterCheckpoint(false)
+      .localCheckpoint(false)
     def labelSum(df: DataFrame): java.math.BigDecimal =
       df.agg(sum(col("cluster_id").cast("decimal(38,0)")))
         .head().getDecimal(0)
@@ -94,7 +88,7 @@ object Cluster {
         .select(col("dst").as("id"), col("cluster_id"))
       val next = labels.select(col("id"), col("cluster_id")).union(prop)
         .groupBy(col("id")).agg(min(col("cluster_id")).as("cluster_id"))
-        .iterCheckpoint(false)
+        .localCheckpoint(false)
       val nextSum = labelSum(next)
       // labelSum materialized `next`, so the superseded round's label
       // copy is dead — RDD-level free (Dataset.unpersist is a no-op on
@@ -149,7 +143,7 @@ object Cluster {
         greatest(col("src"), col("dst")).as("dst"))
       .filter(col("src") =!= col("dst"))
       .distinct()
-    var e = canon.iterCheckpoint(false)
+    var e = canon.localCheckpoint(false)
     def checksum(df: DataFrame): (Long, java.math.BigDecimal) = {
       val r = df.agg(count(lit(1)),
         sum(xxhash64(col("src"), col("dst")).cast("decimal(38,0)"))).head()
@@ -162,7 +156,7 @@ object Cluster {
       while (!converged) {
         require(rounds < MaxRounds,
           s"alternating star contraction did not converge in $MaxRounds rounds")
-        val next = smallStar(largeStar(e)).iterCheckpoint(false)
+        val next = smallStar(largeStar(e)).localCheckpoint(false)
         val cur = checksum(next)
         // counts equal + hashes equal -> exact confirm (one-direction
         // exceptAll suffices when row counts match and rows are distinct)

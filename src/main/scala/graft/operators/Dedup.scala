@@ -902,11 +902,12 @@ object Dedup {
     val tb = train.agg(sum(col("n_tokens"))).head()
     val n = Tables.sizedPartitions(spark,
       if (tb.isNullAt(0)) 0L else tb.getLong(0))
-    Tables.withShufflePartitions(spark, n) {
-    Pack.packByOrder(train.coalesce(n), "doc_id", "n_tokens", Pack.GateBudget)
-      .select(col("doc_id"), col("n_tokens"), col("cum_excl"),
-        col("seq_id"), col("seq_offset"), col("n_splits"))
-      .orderBy(col("doc_id"))
+    graft.Sessions.sized(spark, n) { s =>
+      Pack.packByOrder(graft.Sessions.bind(s, train).coalesce(n), "doc_id",
+          "n_tokens", Pack.GateBudget)
+        .select(col("doc_id"), col("n_tokens"), col("cum_excl"),
+          col("seq_id"), col("seq_offset"), col("n_splits"))
+        .orderBy(col("doc_id"))
     }
   }
 
@@ -979,12 +980,12 @@ object Dedup {
     // cumsum) is curated-corpus-sized, so its shuffle partitioning and
     // cache-read fan-out derive from the measured bytes (guide §2.5;
     // identity at production scale, where the curated corpus outgrows
-    // sizedPartitionBytes × session partitions)
+    // SizedPartitionBytes × session partitions)
     val sz = curated.agg(sum(length(col("clean_text")).cast("long"))).head()
     val n = Tables.sizedPartitions(spark,
       if (sz.isNullAt(0)) 0L else sz.getLong(0))
-    Tables.withShufflePartitions(spark, n) {
-    val curatedS = curated.coalesce(n)
+    graft.Sessions.sized(spark, n) { s =>
+    val curatedS = graft.Sessions.bind(s, curated).coalesce(n)
     val pos = Pack.globalShuffle(curatedS, "clean_text", "doc_id")
       .select(col("doc_id"), col("position"))
     // localCheckpoint, NOT persist: the position relation is a window
@@ -2113,8 +2114,8 @@ object Dedup {
       sum(length(col("text")).cast("long"))).head()
     val n = Tables.sizedPartitions(spark,
       if (hw.isNullAt(1)) 0L else hw.getLong(1))
-    Tables.withShufflePartitions(spark, n) {
-    val histS = hist.coalesce(n)
+    graft.Sessions.sized(spark, n) { spark =>
+    val histS = graft.Sessions.bind(spark, hist).coalesce(n)
     val histBands = graft.Caches.persist(bandedRowsOf(histS))
     val histShingles = shingleRowsOf(histS) // self-persisting
     val histLabels = Cluster.connectedComponents(
@@ -2205,16 +2206,16 @@ object Dedup {
     // production-scale ingest keeps the session's full parallelism —
     // it is not a local tuning constant. softWeightsOf stays OUTSIDE:
     // its output is corpus-sized by definition (the weights table),
-    // and it plans at the restored session parallelism.
+    // and it plans at the session's own parallelism.
     val n = Tables.sizedPartitions(spark,
       (if (ext.isNullAt(2)) 0L else ext.getLong(2)) +
         graft.streaming.StreamingPipeline.dirBytes(spark, clusters))
-    Tables.withShufflePartitions(spark, n) {
+    graft.Sessions.sized(spark, n) { spark =>
     // narrow coalesce ON TOP of the batch cache: downstream kernels and
     // delta writes read the cached blocks in `n` tasks instead of the
     // corpus cache's session-parallelism layout (coalesce never raises
     // a partition count, so a big batch keeps its full layout)
-    val batS = bat.coalesce(n)
+    val batS = graft.Sessions.bind(spark, bat).coalesce(n)
     val batBands = graft.Caches.persist(bandedRowsOf(batS))
     val batShingles = graft.Caches.persist(shingleRowsOf(batS))
     // candidate pairs: batch-internal collisions, plus the batch
@@ -2315,20 +2316,11 @@ object Dedup {
       // independent family folds, run concurrently (guide §2.6): each
       // acquires its OWN family-dir lease on its thread; the root lease
       // held here stays the single-sweep guard
-      // each fold bounds its shuffle partitioning from its own thread
-      // (Tables.withShufflePartitions inside compactDeltas): two
-      // concurrent capture/set/restore pairs on the ONE session conf
-      // can interleave so the last restore writes the other side's
-      // temporary value and the session leaks a fold-sized partition
-      // count — pin the true session value around the join
-      Tables.withShufflePartitions(spark,
-        spark.conf.get("spark.sql.shuffle.partitions").toInt) {
       graft.Par.run2(
         sp.compactDeltasBucketed(spark, geoDir(stateDir, StateBands),
           StateBands._2, ver, geoBucketCols(StateBands), GeoBuckets),
         sp.compactDeltasBucketed(spark, geoDir(stateDir, StateShingles),
           StateShingles._2, ver, geoBucketCols(StateShingles), GeoBuckets))
-      }
       // superseded ingest-guard markers (every fold below the committed
       // one) are retirement residue, exactly like covered deltas
       val root = new org.apache.hadoop.fs.Path(stateDir)
@@ -2381,11 +2373,7 @@ object Dedup {
       // must not cost the store its Exchange-free probe layout.
       // Re-tested through graft.Par in r18 (the r17 measured decision
       // to stay sequential predates the size-bounded folds, which
-      // removed the 32-wide dispatch the two rewrites contended on);
-      // the conf pin around the join is the sweep's two-thread
-      // capture/restore guard (see Tables.withShufflePartitions)
-      Tables.withShufflePartitions(spark,
-        spark.conf.get("spark.sql.shuffle.partitions").toInt) {
+      // removed the 32-wide dispatch the two rewrites contended on)
       graft.Par.run2(
         sp.compactDeltasExcludingBucketed(spark, geoDir(stateDir, StateBands),
           StateBands._2, ver, stateDir, "doc_id",
@@ -2393,7 +2381,6 @@ object Dedup {
         sp.compactDeltasExcludingBucketed(spark, geoDir(stateDir, StateShingles),
           StateShingles._2, ver, stateDir, "doc_id",
           geoBucketCols(StateShingles), GeoBuckets))
-      }
       val labels = st.read(spark, clusters, StateLabels._1, StateLabels._2)
       val sizes = st.read(spark, clusters, StateSizes._1, StateSizes._2)
       // surviving members of the affected components — the only docs

@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Caches.IterCheckpointOps
 import graft.sources.Tables
 
 /** PageRank over the customer↔supplier trade graph — the
@@ -58,13 +57,13 @@ object Graph {
     * Returns (node, r) — r ≈ SCALE · pagerank · |V| (un-normalized). */
   def pageRank(edges: DataFrame, iters: Int = Iters, scale: Long = Scale): DataFrame = {
     val e = graft.Caches.track(edges.select(col("src"), col("dst")).distinct()
-      .repartition(col("src")).iterCheckpoint(true))
+      .repartition(col("src")).localCheckpoint(true))
     val outdeg = e.groupBy(col("src")).agg(count(lit(1)).as("odeg"))
     // (src, dst, odeg) — the loop's constant big side, partitioned by src
     val ed = graft.Caches.track(
-      e.join(outdeg, "src").repartition(col("src")).iterCheckpoint(true))
+      e.join(outdeg, "src").repartition(col("src")).localCheckpoint(true))
     val nodes = graft.Caches.track(e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct().iterCheckpoint(true))
+      .union(e.select(col("dst").as("node"))).distinct().localCheckpoint(true))
     val base = scale * 15 / 100
     var ranks = nodes.select(col("node"), lit(scale).as("r"))
     for (_ <- 1 to iters) {
@@ -78,7 +77,7 @@ object Graph {
       ranks = graft.Caches.track(nodes.join(contrib, Seq("node"), "left")
         .select(col("node"),
           (lit(base) + coalesce(col("in_mass"), lit(0L))).as("r"))
-        .iterCheckpoint(false))
+        .localCheckpoint(false))
     }
     ranks
   }
@@ -103,15 +102,15 @@ object Graph {
   def pageRankUntil(edges: DataFrame, epsMass: Long, maxRounds: Int = 50,
                     scale: Long = Scale): (DataFrame, Int) = {
     val e = graft.Caches.track(edges.select(col("src"), col("dst")).distinct()
-      .repartition(col("src")).iterCheckpoint(true))
+      .repartition(col("src")).localCheckpoint(true))
     val outdeg = e.groupBy(col("src")).agg(count(lit(1)).as("odeg"))
     val ed = graft.Caches.track(
-      e.join(outdeg, "src").repartition(col("src")).iterCheckpoint(true))
+      e.join(outdeg, "src").repartition(col("src")).localCheckpoint(true))
     val nodes = graft.Caches.track(e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct().iterCheckpoint(true))
+      .union(e.select(col("dst").as("node"))).distinct().localCheckpoint(true))
     val base = scale * 15 / 100
     var ranks = graft.Caches.track(nodes.select(col("node"), lit(scale).as("r"))
-      .iterCheckpoint(true))
+      .localCheckpoint(true))
     var rounds = 0
     var converged = false
     while (rounds < maxRounds && !converged) {
@@ -122,7 +121,7 @@ object Graph {
       val next = graft.Caches.track(nodes.join(contrib, Seq("node"), "left")
         .select(col("node"),
           (lit(base) + coalesce(col("in_mass"), lit(0L))).as("r"))
-        .iterCheckpoint(false))
+        .localCheckpoint(false))
       val delta = next.withColumnRenamed("r", "rn")
         .join(ranks.withColumnRenamed("r", "ro"), "node")
         .agg(sum(abs(col("rn") - col("ro"))).as("d"))
@@ -175,7 +174,7 @@ object Graph {
     * closing join) — no iteration, no driver state. */
   def triangleCounts(edges: DataFrame): DataFrame = {
     val und = graft.Caches.track(edges.select(col("a"), col("b")).distinct()
-      .iterCheckpoint(true))
+      .localCheckpoint(true))
     val deg = und.select(col("a").as("n")).union(und.select(col("b").as("n")))
       .groupBy(col("n")).agg(count(lit(1)).as("d"))
     // orient by (degree, id): src = smaller endpoint under that order
@@ -189,7 +188,7 @@ object Graph {
         when(col("da") < col("db") ||
              (col("da") === col("db") && col("a") < col("b")), col("b"))
           .otherwise(col("a")).as("dst"))
-      .iterCheckpoint(true))
+      .localCheckpoint(true))
     val w1 = oriented.select(col("src"), col("dst").as("v"))
     val w2 = oriented.select(col("src"), col("dst").as("w"))
     // wedge (v, w) at apex src, deduped by v < w; closes iff the
@@ -242,7 +241,7 @@ object Graph {
     * triangle — degree alongside so consumers can form the local
     * clustering coefficient 2·n_tri/(d·(d-1)) without a second query. */
   def graphTriangles(spark: SparkSession, dir: String): DataFrame = {
-    val e = graft.Caches.track(cooccurrenceEdges(spark, dir).iterCheckpoint(true))
+    val e = graft.Caches.track(cooccurrenceEdges(spark, dir).localCheckpoint(true))
     val deg = e.select(col("a").as("n")).union(e.select(col("b").as("n")))
       .groupBy(col("n")).agg(count(lit(1)).as("degree"))
     triangleCounts(e)
@@ -294,7 +293,7 @@ object Graph {
     * scan on the driver. */
   def kcore(edges: DataFrame, k: Int, rounds: Int): DataFrame = {
     var e = graft.Caches.track(
-      edges.select(col("a"), col("b")).distinct().iterCheckpoint(true))
+      edges.select(col("a"), col("b")).distinct().localCheckpoint(true))
     for (_ <- 1 to rounds) {
       val keep = e.select(col("a").as("n")).union(e.select(col("b").as("n")))
         .groupBy(col("n")).agg(count(lit(1)).as("d"))
@@ -304,7 +303,7 @@ object Graph {
         e.join(keep.withColumnRenamed("n", "a"), Seq("a"), "left_semi")
           .join(keep.withColumnRenamed("n", "b"), Seq("b"), "left_semi")
           .select(col("a"), col("b"))
-          .iterCheckpoint(false))
+          .localCheckpoint(false))
     }
     e.select(col("a").as("n")).union(e.select(col("b").as("n")))
       .groupBy(col("n")).agg(count(lit(1)).as("core_degree"))

@@ -38,55 +38,28 @@ object Tables {
   /** [[spread]]'s inverse, scale-adaptively (guide §2.5: partition
     * counts must derive from input size, never from a constant tuned
     * for one deployment): the partition count for a region whose
-    * shuffled relations are bounded by `bytes`, at `targetBytes` per
-    * partition, clamped to [1, session `spark.sql.shuffle.partitions`].
+    * shuffled relations are bounded by `bytes`, at [[SizedPartitionBytes]]
+    * per partition, clamped to [1, session `spark.sql.shuffle.partitions`].
     * A KB-sized relation stops fanning every join/agg/CC round out to
     * the session's full partition count — at that size each extra task
     * is pure dispatch/deserialize overhead (the r17 finding: 68 s of
     * task deserialization in one soft-dedup lifecycle; the 8-core
     * suite outrunning the 32-core one) — while any input big enough to
     * want the session's parallelism keeps it unchanged, so the bound
-    * is the identity at production scale. */
-  def sizedPartitions(spark: SparkSession, bytes: Long,
-      targetBytes: Long): Int = {
+    * is the identity at production scale. The region runs at the count
+    * through [[graft.Sessions.sized]]. */
+  def sizedPartitions(spark: SparkSession, bytes: Long): Int = {
     val cap = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val want = (math.max(0L, bytes) + targetBytes - 1L) / targetBytes
+    val want = (math.max(0L, bytes) + SizedPartitionBytes - 1L) / SizedPartitionBytes
     math.max(1L, math.min(cap.toLong, want)).toInt
   }
 
   /** One shared per-partition byte target for every sized region
-    * (`graft.sizedPartitionBytes`, default 32 MB): the guide's
-    * 100 MB–1 GB shuffle-partition band taken at the low end because
-    * the regions using it (soft-dedup folds, family compactions) run
-    * CPU-denser kernels per byte than a plain byte-bound stage.
-    * Production tunes the one conf to its executor split sizing. */
-  def sizedPartitionBytes(spark: SparkSession): Long =
-    spark.conf.getOption("graft.sizedPartitionBytes")
-      .map(_.toLong).getOrElse(32L << 20)
-
-  /** [[sizedPartitions]] at the session's [[sizedPartitionBytes]]. */
-  def sizedPartitions(spark: SparkSession, bytes: Long): Int =
-    sizedPartitions(spark, bytes, sizedPartitionBytes(spark))
-
-  /** Run `f` with `spark.sql.shuffle.partitions` set to `n`, restoring
-    * the session value after — the conf-scoped companion of
-    * [[sizedPartitions]] for driver-side regions whose actions all
-    * shuffle relations of the measured size (lazy frames BUILT inside
-    * but executed outside plan with the restored session value).
-    *
-    * CONCURRENCY HAZARD: the conf is session-global. Two of these
-    * regions on different threads of one session interleave their
-    * capture/set/restore pairs, and the LAST restore can write the
-    * other side's temporary value into the session. A caller that
-    * overlaps conf-bounding work with [[graft.Par.run2]] must pin the
-    * true session value around the join with an OUTER wrapper at the
-    * current value (see Dedup.softDedupSweep). */
-  def withShufflePartitions[A](spark: SparkSession, n: Int)(f: => A): A = {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.get(key)
-    spark.conf.set(key, n.toString)
-    try f finally spark.conf.set(key, prev)
-  }
+    * (32 MB): the guide's 100 MB–1 GB shuffle-partition band taken at
+    * the low end because the regions using it (soft-dedup folds, family
+    * compactions) run CPU-denser kernels per byte than a plain
+    * byte-bound stage. */
+  val SizedPartitionBytes: Long = 32L << 20
 
   val regionSchema: StructType = StructType(Seq(
     StructField("r_regionkey", IntegerType),

@@ -33,51 +33,36 @@ object StreamingGates {
   // GBs per full run (r14 finding)
   private def tmp(prefix: String): String = graft.TmpDirs.create(prefix)
 
-  /** Run `f` with `spark.sql.shuffle.partitions` lowered to `n`,
-    * restoring the session value after. The stateful gates replay a few
-    * thousand rows through 3–4 micro-batches, but every stateful
-    * operator pays per-partition state-store fixed cost (HDFS-backed
-    * store open/commit/snapshot × partitions × batches — state ops also
-    * pin the partition count at first start and disable AQE coalescing),
-    * so 32 session partitions were pure overhead: ~40% of
-    * `stream_stream_join`'s wall time, measured. Correctness cannot
-    * depend on the partition count — every gate's fold is
-    * order-insensitive by design (decimal partials, count aggregates,
-    * per-key state, inner joins) and each gate still hash-matches its
-    * batch twin's oracle, which is the point of the gates. Production
-    * streams size this by state volume (and use the RocksDB provider);
-    * the replay corpora are deliberately tiny. */
-  /** NOT switched to the RocksDB state-store provider, and that is a
-    * MEASURED decision, not an oversight: scoping
-    * `spark.sql.streaming.stateStore.providerClass` to these gate
-    * sessions (r11 experiment, rocksdbjni present) cost each stateful
-    * gate ~1.1–1.7 s — min AND med inflated on exactly the switched
-    * queries (windowed agg 3.25 → 4.44 s, sessionize 3.17 → 4.29,
-    * mix-drift 3.30 → 5.00, stream-stream join 6.19 → 7.52) — because
-    * native store spin-up per partition × batch dominates at toy state
-    * sizes, while the default provider's HashMap is effectively free
-    * locally. Production still wants RocksDB once state outgrows
-    * executor heap (the provider bounds memory, not time, at scale);
-    * the conf is one line in the session builder there. Semantics are
-    * identical either way — the gates hash-match their batch oracles
-    * under both providers (verified before reverting). */
-  /** NOT applied to the foreachBatch store gates either (except
-    * [[streamNearDup]]), again a MEASURED decision: wrapping all 11
-    * foreachBatch gates (r11 A/B at sf0.1) cost +5.0 s net — 9 of 11
-    * slower by +0.1 to +1.5 s each — because their per-batch jobs do
-    * real CPU work on corpus-sized batches (shingling, variant
-    * hashing, levenshtein verify) and 8 partitions underuses the 32
-    * cores; the stateful gates' win came from state-store fixed cost ×
-    * partitions, which foreachBatch does not pay. [[streamNearDup]] is
-    * the exception and keeps the wrap: it runs TWO streaming queries
-    * whose per-batch work is small index probes, and measured 9.1/9.3 s
-    * wrapped vs 9.4–13.9 s unwrapped (lower AND tighter). */
-  private def withFewShufflePartitions[A](spark: SparkSession, n: Int = 8)(f: => A): A = {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.get(key)
-    spark.conf.set(key, n.toString)
-    try f finally spark.conf.set(key, prev)
-  }
+  /** Shuffle partition count of the wrapped stream gates' regions
+    * ([[graft.Sessions.sized]]). It is in place when their queries
+    * `start()`, so it is the count each stateful query fixes in its
+    * checkpoint. The replay corpora are a few thousand rows through 3–4
+    * micro-batches, while every stateful operator pays a per-partition
+    * state-store fixed cost (open/commit/snapshot × partitions ×
+    * batches; state ops also disable AQE coalescing): 32 partitions
+    * were ~40% of `stream_stream_join`'s wall time, measured.
+    * Correctness cannot depend on the count — every gate's fold is
+    * order-insensitive (decimal partials, count aggregates, per-key
+    * state, inner joins) and each gate hash-matches its batch twin's
+    * oracle. Production streams size this by state volume.
+    *
+    * Measured decisions (r11, sf0.1), recorded so they are not re-tried
+    * blind:
+    *  - The RocksDB state-store provider cost each stateful gate
+    *    ~1.1–1.7 s, min AND med (windowed agg 3.25 → 4.44 s, sessionize
+    *    3.17 → 4.29, mix-drift 3.30 → 5.00, stream-stream join
+    *    6.19 → 7.52): native store spin-up per partition × batch
+    *    dominates at toy state sizes. Semantics are identical (the gates
+    *    hash-matched under both providers); production wants RocksDB
+    *    once state outgrows executor heap — it bounds memory, not time.
+    *  - Wrapping all 11 foreachBatch gates of that round cost +5.0 s net
+    *    (9 of 11 slower by 0.1–1.5 s): their per-batch jobs do real CPU
+    *    work on corpus-sized batches (shingling, variant hashing,
+    *    levenshtein verify), which 8 partitions underuse on 32 cores.
+    *    [[streamNearDup]] kept the wrap: its two queries' per-batch work
+    *    is small index probes, 9.1/9.3 s wrapped vs 9.4–13.9 s
+    *    unwrapped (lower AND tighter). */
+  private val GatePartitions = 8
 
   /** Time-range replay chunker: assign each event to one of `n` chunks by
     * equal-width TIME ranges (chunk ∈ 1..n), so every event in chunk i+1
@@ -293,7 +278,8 @@ object StreamingGates {
     * per-window fold order-insensitive, so micro-batch boundaries
     * cannot leak into the sums and the hash compare proves
     * stream ≡ batch ≡ oracle. */
-  def streamWindowedAgg(spark: SparkSession, dir: String): DataFrame = withFewShufflePartitions(spark) {
+  def streamWindowedAgg(spark: SparkSession, dir: String): DataFrame =
+    graft.Sessions.sized(spark, GatePartitions) { spark =>
     val events = Tables.events(spark, dir)
     val in = tmp("graft_sgate_win_in_")
     val out = tmp("graft_sgate_win_out_")
@@ -343,7 +329,8 @@ object StreamingGates {
     * stand-in for a Kafka topic), not operator cost; the operator's own
     * state is bounded by the watermark horizon, never by user
     * lifetime. */
-  def streamSessionize(spark: SparkSession, dir: String): DataFrame = withFewShufflePartitions(spark) {
+  def streamSessionize(spark: SparkSession, dir: String): DataFrame =
+    graft.Sessions.sized(spark, GatePartitions) { spark =>
     val events = Tables.events(spark, dir)
     val in = tmp("graft_sgate_sess_in_")
     val out = tmp("graft_sgate_sess_out_")
@@ -391,7 +378,8 @@ object StreamingGates {
     * path as the batch report) yields `prof_drift_report`'s relation —
     * gated against that query's oracle, so the compare proves
     * stream ≡ batch ≡ oracle for the mix-drift monitor too. */
-  def streamMixDrift(spark: SparkSession, dir: String): DataFrame = withFewShufflePartitions(spark) {
+  def streamMixDrift(spark: SparkSession, dir: String): DataFrame =
+    graft.Sessions.sized(spark, GatePartitions) { spark =>
     import graft.operators.Profiling
     val events = Tables.events(spark, dir)
     val in = tmp("graft_sgate_mix_in_")
@@ -695,7 +683,8 @@ object StreamingGates {
     * events carry one fixed timestamp: eviction never fires during the
     * replay (the corpus IS the horizon), keeping the candidate set
     * equal to the batch self-join's by construction. */
-  def streamNearDup(spark: SparkSession, dir: String): DataFrame = withFewShufflePartitions(spark) {
+  def streamNearDup(spark: SparkSession, dir: String): DataFrame =
+    graft.Sessions.sized(spark, GatePartitions) { spark =>
     val corpus = Dedup.augmented(spark, dir)
     val in = tmp("graft_sgate_nd_in_")
     val store = tmp("graft_sgate_nd_store_")
@@ -745,7 +734,7 @@ object StreamingGates {
     * surviving pairs): expiry must lose no verifiable pair and invent
     * none. */
   def streamNearDupTtl(spark: SparkSession, dir: String): DataFrame =
-    withFewShufflePartitions(spark) {
+    graft.Sessions.sized(spark, GatePartitions) { spark =>
     val corpus = Dedup.augmented(spark, dir)
     val inStore = tmp("graft_sgate_ndt_ins_")
     val inCand = tmp("graft_sgate_ndt_inc_")
@@ -802,7 +791,7 @@ object StreamingGates {
     * `tx_soft_budget_mix` oracle: stream-served keeps ≡ batch keeps ≡
     * oracle, through the persisted state. */
   def streamSoftBudgetMix(spark: SparkSession, dir: String): DataFrame =
-    withFewShufflePartitions(spark) {
+    graft.Sessions.sized(spark, GatePartitions) { spark =>
       val stateDir = tmp("graft_sgate_smix_state_")
       softMixModelState(spark, dir, stateDir)
       softMixServeStream(spark, dir, stateDir, "graft_sgate_smix_")
@@ -882,7 +871,7 @@ object StreamingGates {
     * BOTH weights and rates computed over the survivor corpus, so the
     * hash compare proves erase-then-serve ≡ model-built-on-survivors. */
   def streamSoftBudgetMixDelete(spark: SparkSession, dir: String): DataFrame =
-    withFewShufflePartitions(spark) {
+    graft.Sessions.sized(spark, GatePartitions) { spark =>
       val stateDir = tmp("graft_sgate_smixdel_state_")
       softMixModelState(spark, dir, stateDir)
       graft.operators.Dedup.softMixErase(spark, stateDir,
@@ -916,7 +905,7 @@ object StreamingGates {
     * staging write executes the fold plan while the previous snapshot
     * is still on disk, so no per-fold lineage checkpoint is pinned). */
   def streamSoftDedup(spark: SparkSession, dir: String): DataFrame =
-    withFewShufflePartitions(spark) {
+    graft.Sessions.sized(spark, GatePartitions) { spark =>
     val corpus = Dedup.augmented(spark, dir)
     val inStore = tmp("graft_sgate_sd_ins_")
     val inCand = tmp("graft_sgate_sd_inc_")
@@ -1007,7 +996,7 @@ object StreamingGates {
     * hash-proven for the WEIGHTS — an under-deleted pair or a stale
     * size anywhere flips a multiplicity cell. */
   def streamSoftDedupDelete(spark: SparkSession, dir: String): DataFrame =
-    withFewShufflePartitions(spark) {
+    graft.Sessions.sized(spark, GatePartitions) { spark =>
     val corpus = Dedup.augmented(spark, dir)
     val inStore = tmp("graft_sgate_sdd_ins_")
     val inCand = tmp("graft_sgate_sdd_inc_")
@@ -1153,7 +1142,7 @@ object StreamingGates {
     * StreamingSpec (backlog stays empty after a post-erase near-dup of
     * an erased doc arrives). */
   def streamNearDupDelete(spark: SparkSession, dir: String): DataFrame =
-    withFewShufflePartitions(spark) {
+    graft.Sessions.sized(spark, GatePartitions) { spark =>
     val corpus = Dedup.augmented(spark, dir)
     val inStore = tmp("graft_sgate_ndd_ins_")
     val inCand = tmp("graft_sgate_ndd_inc_")
@@ -1228,7 +1217,8 @@ object StreamingGates {
     * 2-hour delay ≥ 2× the 1-hour join window no evicted click can
     * still match. State stays watermark-bounded — the production
     * contract this gate exists to pin. */
-  def streamStreamJoin(spark: SparkSession, dir: String): DataFrame = withFewShufflePartitions(spark) {
+  def streamStreamJoin(spark: SparkSession, dir: String): DataFrame =
+    graft.Sessions.sized(spark, GatePartitions) { spark =>
     val events = Tables.events(spark, dir)
     val inL = tmp("graft_sgate_ssj_l_")
     val inR = tmp("graft_sgate_ssj_r_")

@@ -1115,13 +1115,13 @@ object StreamingPipeline {
         !(snaps.contains(uptoVersion) && unfolded.isEmpty)) {
       // fold-shuffle partitioning bounded by the family's actual
       // on-disk bytes (guide §2.5 — scale-adaptive, identity once the
-      // family outgrows sizedPartitionBytes × session partitions): a
+      // family outgrows SizedPartitionBytes × session partitions): a
       // KB-sized family must not fan its fold out to the session's
       // full partition count. The bucketed publish's own
       // repartition(buckets) is explicit and unaffected.
       val foldN = graft.sources.Tables.sizedPartitions(
         spark, dirBytes(spark, dir))
-      graft.sources.Tables.withShufflePartitions(spark, foldN) {
+      graft.Sessions.sized(spark, foldN) { spark =>
       val folded = deltasBelow(spark, dir, schema, uptoVersion + 1)
       val contents = exclude.fold(folded) { case (storeRoot, keyCols) =>
         antiJoinTombstones(spark, folded, storeRoot, keyCols)

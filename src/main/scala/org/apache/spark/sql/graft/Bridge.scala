@@ -1,7 +1,8 @@
 package org.apache.spark.sql.graft
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, Dataset, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.classic
 import org.apache.spark.sql.classic.ExpressionUtils
 
 /** Column ⇄ Expression bridge. `ExpressionUtils` is `private[sql]`, so the
@@ -11,6 +12,17 @@ import org.apache.spark.sql.classic.ExpressionUtils
 object Bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
+
+  /** A child of `s`: a copy of its current conf, temp views and
+    * functions, sharing its SparkContext and CacheManager; conf set on
+    * the child never reaches `s`. */
+  def cloneSession(s: SparkSession): SparkSession =
+    s.asInstanceOf[classic.SparkSession].cloneSession()
+
+  /** `ds`'s logical plan as a Dataset of session `s`, planned under its conf. */
+  def ofSession[T](s: SparkSession, ds: Dataset[T]): Dataset[T] =
+    new classic.Dataset[T](s.asInstanceOf[classic.SparkSession],
+      ds.asInstanceOf[classic.Dataset[T]].logicalPlan, ds.encoder)
 
   /** Unload every loaded state-store provider and stop the shared
     * background maintenance thread ([[org.apache.spark.sql.execution.streaming.state.StateStore]]

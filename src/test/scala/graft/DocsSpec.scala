@@ -3,6 +3,8 @@ package graft
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
+import scala.jdk.CollectionConverters._
+
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Pins the query counts quoted in the docs to `SparkEntry` itself —
@@ -43,5 +45,24 @@ class DocsSpec extends AnyFunSuite {
           s"$p says '${m.matched}'; actual split is $exact hash-exact + $rowsOnly rows-only")
       }
     }
+  }
+
+  test("only graft.Sessions writes spark.sql.shuffle.partitions") {
+    // a region sized by writing the shared conf races every concurrent
+    // region on the session; Sessions.sized sizes a clone instead
+    val walk = Files.walk(Paths.get("src/main"))
+    val sources = try walk.iterator().asScala.map(_.toString)
+      .filter(p => p.endsWith(".scala") && !p.endsWith("/graft/Sessions.scala")).toList
+      finally walk.close()
+    // the key as a literal, as SQLConf's entry, or as a val bound to the literal
+    val lit = "\"spark\\.sql\\.shuffle\\.partitions\""
+    val writers = sources.filter { p =>
+      val txt = read(p)
+      val names = raw"val\s+(\w+)\s*=\s*$lit".r.findAllMatchIn(txt).map(m => raw"\b${m.group(1)}\b")
+      val key = (Seq(lit, raw"SQLConf\.SHUFFLE_PARTITIONS") ++ names).mkString("(", "|", ")")
+      raw"(\.config|conf\.set)\(\s*$key".r.findFirstIn(txt).isDefined
+    }
+    assert(sources.nonEmpty && writers.isEmpty,
+      s"spark.sql.shuffle.partitions written outside graft.Sessions in: ${writers.mkString(", ")}")
   }
 }

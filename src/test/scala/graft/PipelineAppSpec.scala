@@ -87,4 +87,12 @@ class PipelineAppSpec extends SparkSpec {
     }
     assert(e.getMessage.contains("schema"))
   }
+
+  test("--repartition rejects a count that is not a positive integer") {
+    Seq("0", "abc").foreach { n =>
+      val e = intercept[IllegalArgumentException](
+        PipelineApp.run(spark, Array("unused.json", "--repartition", n)))
+      assert(e.getMessage.contains(s"--repartition needs a positive integer, got '$n'"))
+    }
+  }
 }

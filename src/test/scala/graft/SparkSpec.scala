@@ -10,16 +10,13 @@ trait SparkSpec extends AnyFunSuite {
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    Caches.quietCheckpointFreeWarnings()
-    s
+  lazy val session: SparkSession = Sessions.local("graft-test", 4, "WARN")
+
+  /** Run `f` with AQE off, so `executedPlan` shows every exchange
+    * statically instead of one unexpanded adaptive leaf. */
+  def aqeOff[A](spark: SparkSession)(f: => A): A = {
+    val prev = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try f finally spark.conf.set("spark.sql.adaptive.enabled", prev)
   }
 }

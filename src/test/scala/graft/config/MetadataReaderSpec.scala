@@ -45,9 +45,11 @@ class MetadataReaderSpec extends AnyFunSuite {
   }
 
   test("rejects unknown validation rules at parse time (reference MatchErrors at run time)") {
-    val bad = referenceShaped.replace("\"notEmpty\"", "\"notBanana\"")
-    val e = intercept[IllegalArgumentException](MetadataReader.parse(bad))
-    assert(e.getMessage.contains("notBanana"))
+    Seq("notBanana", "minLength:abc", "minLength:-1", "matchesRegex:(").foreach { rule =>
+      val bad = referenceShaped.replace("\"notEmpty\"", s"\"$rule\"")
+      val e = intercept[IllegalArgumentException](MetadataReader.parse(bad))
+      assert(e.getMessage.contains(rule), e.getMessage)
+    }
   }
 
   test("rejects unknown transformation types (reference silently ignores them)") {

@@ -50,9 +50,7 @@ class PlanSpec extends SparkSpec {
     // AdaptiveSparkPlan leaf and collect() sees no Window at all (the
     // PlanGold lesson)
     import org.apache.spark.sql.execution.window.WindowExec
-    val prev = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
+    SparkSpec.aqeOff(spark) {
       val offenders = SparkEntry.queries.toSeq.flatMap { case (name, fn) =>
         try {
           val bad = fn(spark, sf()).queryExecution.executedPlan.collect {
@@ -66,7 +64,7 @@ class PlanSpec extends SparkSpec {
           "partition by a constant NON-FOLDABLE key where a key is " +
           "semantically absent (lit(1) gets stripped by " +
           "EliminateWindowPartitions)")
-    } finally spark.conf.set("spark.sql.adaptive.enabled", prev)
+    }
   }
 
   test("dimension joins broadcast; scans push filters; top-k never global-sorts") {

@@ -48,13 +48,12 @@ object PlanGold {
 
   /** (name, fingerprint) for every gated query, sorted by name. */
   def compute(spark: SparkSession, sfDir: String): Seq[(String, String)] = {
-    val prev = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
-      try name -> fingerprint(fn(spark, sfDir))
-      finally Caches.releaseAll()
+    SparkSpec.aqeOff(spark) {
+      SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
+        try name -> fingerprint(fn(spark, sfDir))
+        finally Caches.releaseAll()
+      }
     }
-    finally spark.conf.set("spark.sql.adaptive.enabled", prev)
   }
 
   def read(): Map[String, String] =
