@@ -1,40 +1,61 @@
 package graft
 
-/** Run two INDEPENDENT driver-side actions concurrently (guide §2.6:
+/** Run INDEPENDENT driver-side actions concurrently (guide §2.6:
   * Spark's scheduler happily runs several jobs at once inside one
   * application; actions are only sequential because driver code calls
-  * them sequentially). The paired-artifact writers here — a soft-dedup
-  * state's band and shingle families, a search index's postings and
-  * lens, an ANN index's vectors and bands — each publish two relations
-  * with no data dependency, and running the second publish's jobs while
-  * the first one's write tail drains back-fills otherwise idle cores.
-  * At production scale the same overlap fills the cluster during each
-  * write's straggler tail; locally it roughly halves the paired-write
-  * wall time.
+  * them sequentially). Callers: the soft-dedup state's paired band and
+  * shingle family publishes, and the sink fan-out
+  * ([[graft.sinks.Sinks.persist]]). Running one write's jobs while
+  * another's tail drains back-fills otherwise idle cores (at scale: the
+  * cluster during each write's straggler tail).
   *
-  * Failure contract: both sides always run to completion (no
-  * cancellation channel — each side is an independently crash-safe
-  * publish protocol); the FIRST throwable (left side preferred) is
-  * rethrown, the other attached as suppressed, so no failure is
-  * silently swallowed. Leases: [[graft.streaming.MaintenanceLease]] is
-  * re-entrant PER THREAD, so sides must not rely on a lease the calling
-  * thread holds — fine for the family-dir publishes (each acquires its
-  * own family lease; the caller's root lease is advisory across
-  * threads), asserted by the existing lifecycle specs. */
+  * The first side runs on the calling thread, every other side on a new
+  * thread, which inherits the caller's Spark local properties (job
+  * group, scheduler pool). A single side runs inline.
+  *
+  * Failure contract: every side runs to completion (no cancellation
+  * channel — each side is an independently crash-safe write); the first
+  * throwable in side order is rethrown with the others suppressed, so
+  * no failure is silently swallowed.
+  *
+  * Interrupt contract: `all` never returns or throws while a side is
+  * still running. An interrupt of the caller (`StreamingQuery.stop()`
+  * during `foreachBatch`) is deferred until every side has finished —
+  * else a writer could still be filling its target when the replay
+  * overwrites it — and is then re-asserted on the calling thread.
+  *
+  * Leases: [[graft.streaming.MaintenanceLease]] is re-entrant PER
+  * THREAD, so sides must not rely on a lease the calling thread holds
+  * (each family publish acquires its own family lease; the caller's
+  * root lease is advisory across threads).
+  *
+  * DocsSpec keeps this the one place in `src/main` that starts threads. */
 object Par {
-  def run2(a: => Unit, b: => Unit): Unit = {
-    @volatile var bErr: Throwable = null
-    val t = new Thread(() => {
-      try b catch { case e: Throwable => bErr = e }
-    }, "graft-par-2")
-    t.start()
-    var aErr: Throwable = null
-    try a catch { case e: Throwable => aErr = e }
-    t.join()
-    if (aErr != null) {
-      if (bErr != null) aErr.addSuppressed(bErr)
-      throw aErr
-    }
-    if (bErr != null) throw bErr
+  def all(sides: Seq[() => Unit]): Unit = sides match {
+    case Seq() =>
+    case Seq(only) => only()
+    case first +: rest =>
+      val errs = new Array[Throwable](sides.size)
+      val threads = rest.zipWithIndex.map { case (side, i) =>
+        new Thread(() => {
+          try side() catch { case e: Throwable => errs(i + 1) = e }
+        }, s"graft-par-${i + 1}")
+      }
+      threads.foreach(_.start())
+      try first() catch { case e: Throwable => errs(0) = e }
+      var interrupted = false
+      threads.foreach { t =>
+        while (t.isAlive) {
+          try t.join() catch { case _: InterruptedException => interrupted = true }
+        }
+      }
+      if (interrupted) Thread.currentThread().interrupt()
+      // join() orders each side's write of errs before this read
+      errs.filter(_ != null) match {
+        case Array() =>
+        case Array(e, others @ _*) =>
+          others.foreach(e.addSuppressed)
+          throw e
+      }
   }
 }

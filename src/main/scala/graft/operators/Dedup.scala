@@ -2130,9 +2130,9 @@ object Dedup {
     // families are independent relations (both read from cache):
     // publish them concurrently so the second write's jobs back-fill
     // the first one's tail (guide §2.6 / graft.Par)
-    graft.Par.run2(
-      publishGeometrySnapshot(spark, stateDir, StateBands, histBands, 0L),
-      publishGeometrySnapshot(spark, stateDir, StateShingles, histShingles, 0L))
+    graft.Par.all(Seq(
+      () => publishGeometrySnapshot(spark, stateDir, StateBands, histBands, 0L),
+      () => publishGeometrySnapshot(spark, stateDir, StateShingles, histShingles, 0L)))
     graft.streaming.SoftState.publish(spark, clustersDir(stateDir), 0L,
       Seq(StateLabels._1 -> histLabels, StateSizes._1 -> histSizes))
     }
@@ -2253,9 +2253,9 @@ object Dedup {
       newEdges)
     // batch-sized, independent, both read from cache — write them
     // concurrently (guide §2.6)
-    graft.Par.run2(
-      writeGeometryDelta(stateDir, StateBands, batBands, ver + 1L),
-      writeGeometryDelta(stateDir, StateShingles, batShingles, ver + 1L))
+    graft.Par.all(Seq(
+      () => writeGeometryDelta(stateDir, StateBands, batBands, ver + 1L),
+      () => writeGeometryDelta(stateDir, StateShingles, batShingles, ver + 1L)))
     // the next fold's high-water BEFORE the cluster publish: a crash
     // between the two leaves a stale v+1 marker the re-run overwrites
     // (committed version still gates), never a committed fold without
@@ -2316,11 +2316,11 @@ object Dedup {
       // independent family folds, run concurrently (guide §2.6): each
       // acquires its OWN family-dir lease on its thread; the root lease
       // held here stays the single-sweep guard
-      graft.Par.run2(
-        sp.compactDeltasBucketed(spark, geoDir(stateDir, StateBands),
+      graft.Par.all(Seq(
+        () => sp.compactDeltasBucketed(spark, geoDir(stateDir, StateBands),
           StateBands._2, ver, geoBucketCols(StateBands), GeoBuckets),
-        sp.compactDeltasBucketed(spark, geoDir(stateDir, StateShingles),
-          StateShingles._2, ver, geoBucketCols(StateShingles), GeoBuckets))
+        () => sp.compactDeltasBucketed(spark, geoDir(stateDir, StateShingles),
+          StateShingles._2, ver, geoBucketCols(StateShingles), GeoBuckets)))
       // superseded ingest-guard markers (every fold below the committed
       // one) are retirement residue, exactly like covered deltas
       val root = new org.apache.hadoop.fs.Path(stateDir)
@@ -2374,13 +2374,13 @@ object Dedup {
       // Re-tested through graft.Par in r18 (the r17 measured decision
       // to stay sequential predates the size-bounded folds, which
       // removed the 32-wide dispatch the two rewrites contended on)
-      graft.Par.run2(
-        sp.compactDeltasExcludingBucketed(spark, geoDir(stateDir, StateBands),
+      graft.Par.all(Seq(
+        () => sp.compactDeltasExcludingBucketed(spark, geoDir(stateDir, StateBands),
           StateBands._2, ver, stateDir, "doc_id",
           geoBucketCols(StateBands), GeoBuckets),
-        sp.compactDeltasExcludingBucketed(spark, geoDir(stateDir, StateShingles),
+        () => sp.compactDeltasExcludingBucketed(spark, geoDir(stateDir, StateShingles),
           StateShingles._2, ver, stateDir, "doc_id",
-          geoBucketCols(StateShingles), GeoBuckets))
+          geoBucketCols(StateShingles), GeoBuckets)))
       val labels = st.read(spark, clusters, StateLabels._1, StateLabels._2)
       val sizes = st.read(spark, clusters, StateSizes._1, StateSizes._2)
       // surviving members of the affected components — the only docs

@@ -43,7 +43,14 @@ object StreamingPipeline {
     spark.readStream.format(format.toLowerCase).schema(schema).load(path)
 
   /** Streaming dataflow: validation-split fan-out per micro-batch.
-    * Returns the started query (caller awaits/stops). */
+    * Each micro-batch is persisted once, and [[Sinks.persist]] submits
+    * all of its writes (every sink path, plus every Kafka publish) at
+    * once, so `addBatch` takes about as long as the slowest write.
+    * `persist` returns only after every write has finished, even when
+    * `stop()` interrupts the batch, so no writer of a failed or stopped
+    * batch outlives it; the batch's replay after a restart overwrites
+    * each `batch=<id>` directory whole (idempotent). Returns the started
+    * query (caller awaits/stops). */
   def runDataflow(source: DataFrame, conf: DataflowConf,
                   checkpointDir: String,
                   kafkaServer: Option[String] = None,

@@ -47,13 +47,16 @@ class DocsSpec extends AnyFunSuite {
     }
   }
 
+  private lazy val mainSources: List[String] = {
+    val walk = Files.walk(Paths.get("src/main"))
+    try walk.iterator().asScala.map(_.toString).filter(_.endsWith(".scala")).toList
+    finally walk.close()
+  }
+
   test("only graft.Sessions writes spark.sql.shuffle.partitions") {
     // a region sized by writing the shared conf races every concurrent
     // region on the session; Sessions.sized sizes a clone instead
-    val walk = Files.walk(Paths.get("src/main"))
-    val sources = try walk.iterator().asScala.map(_.toString)
-      .filter(p => p.endsWith(".scala") && !p.endsWith("/graft/Sessions.scala")).toList
-      finally walk.close()
+    val sources = mainSources.filterNot(_.endsWith("/graft/Sessions.scala"))
     // the key as a literal, as SQLConf's entry, or as a val bound to the literal
     val lit = "\"spark\\.sql\\.shuffle\\.partitions\""
     val writers = sources.filter { p =>
@@ -64,5 +67,23 @@ class DocsSpec extends AnyFunSuite {
     }
     assert(sources.nonEmpty && writers.isEmpty,
       s"spark.sql.shuffle.partitions written outside graft.Sessions in: ${writers.mkString(", ")}")
+  }
+
+  test("only graft.Par starts threads") {
+    // Par.all holds the one interrupt and failure contract for concurrent
+    // work; TmpDirs' exit-time sweep is the one listed exception
+    val start = raw"new Thread\b|extends Thread\b|Thread\.(ofPlatform|ofVirtual|startVirtualThread)|" +
+      raw"Executors\.new|new (ForkJoinPool|ThreadPoolExecutor|ScheduledThreadPoolExecutor|Timer)\b|" +
+      raw"\bFuture\s*[({]|ExecutionContext\.global"
+    val starts = start.r
+    val (par, others) = mainSources.partition(_.endsWith("/graft/Par.scala"))
+    assert(par.exists(p => starts.findFirstIn(read(p)).isDefined), "the lint no longer sees Par's threads")
+    val starters = others.filter { p =>
+      val txt = read(p)
+      val checked = if (p.endsWith("/graft/TmpDirs.scala"))
+        txt.replace("addShutdownHook(new Thread(", "addShutdownHook(") else txt
+      starts.findFirstIn(checked).isDefined
+    }
+    assert(starters.isEmpty, s"threads started outside graft.Par in: ${starters.mkString(", ")}")
   }
 }

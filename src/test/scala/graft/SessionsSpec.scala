@@ -31,7 +31,7 @@ class SessionsSpec extends SparkSpec {
         df
       }
       var two, three: DataFrame = null
-      Par.run2({ two = region(2) }, { three = region(3) })
+      Par.all(Seq(() => two = region(2), () => three = region(3)))
       assert(spark.conf.get("spark.sql.shuffle.partitions") == before)
       // a returned frame plans at the caller's count, as one built outside
       assert(Seq(two, three).map(shuffleCounts) == Seq.fill(2)(Seq(before.toInt)))

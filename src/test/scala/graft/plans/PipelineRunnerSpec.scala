@@ -198,6 +198,28 @@ class PipelineRunnerSpec extends SparkSpec {
     assert(e.getMessage.contains("silently dropped"))
   }
 
+  test("every sink is checked before any write: a bad sink leaves a good one's path empty") {
+    import graft.config.SinkConf
+    val out = Files.createTempDirectory("graft_out_checked_").toString
+    val good = SinkConf("ok_with_date", "good", Seq(s"$out/good"), "json", "overwrite",
+      topic = Some("t"))
+    val splits = Map("ok_with_date" -> Seq(1).toDF("x"), "validation_ko" -> Seq(2).toDF("x"))
+    Seq(
+      (SinkConf("no_such_split", "bad", Seq(s"$out/bad"), "json", "overwrite"), None,
+        "no_such_split"),
+      (SinkConf("validation_ko", "bad", Nil, "json", "append", topic = Some("t")), None,
+        "silently dropped"),
+      // a broker is named, but the check fails before anything connects to it
+      (SinkConf("validation_ko", "bad", Seq(s"$out/bad"), "json", "overwrite"),
+        Some("localhost:9"), "no Kafka topic")
+    ).foreach { case (bad, broker, msg) =>
+      val e = intercept[IllegalArgumentException](
+        graft.sinks.Sinks.persist(Seq(good, bad), splits, broker, defaultTopics = Map.empty))
+      assert(e.getMessage.contains(msg))
+      assert(!new java.io.File(s"$out/good").exists(), s"'$msg': the good sink was written")
+    }
+  }
+
   test("add_fields sequential semantics: later fields see earlier ones") {
     val df = Seq((2, 3)).toDF("a", "b")
     val out = AddFields(Seq(
