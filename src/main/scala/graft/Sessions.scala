@@ -16,9 +16,7 @@ object Sessions {
 
   /** The AQE keys of Bench's session; the tools that must plan exactly
     * like the bench (JobProfile, ExplainDump) pass the same ones. */
-  val Adaptive: Seq[(String, String)] = Seq(
-    "spark.sql.adaptive.enabled" -> "true",
-    "spark.sql.adaptive.coalescePartitions.enabled" -> "true")
+  val Adaptive: Seq[(String, String)] = Seq("spark.sql.adaptive.enabled" -> "true")
 
   /** The core count a tool runs at: `SPARK_GRAFT_CPUS`, else `default`. */
   def envCpus(default: Int): Int =

@@ -2,6 +2,8 @@ package graft.config
 
 import com.fasterxml.jackson.databind.{DeserializationFeature, ObjectMapper}
 import com.fasterxml.jackson.module.scala.{ClassTagExtensions, DefaultScalaModule}
+import org.apache.spark.sql.catalyst.parser.CatalystSqlParser
+import org.apache.spark.sql.types.StructType
 
 /** Typed metadata model for the dataflow-document DSL.
   *
@@ -16,6 +18,9 @@ import com.fasterxml.jackson.module.scala.{ClassTagExtensions, DefaultScalaModul
   *     silently ignores unknown transformation types and throws a bare
   *     `MatchError` at run time for unknown rules/sinks,
   *     `PipelineProcessor.scala:57-60,120-144`);
+  *   - `add_fields` functions, `filter_expr` expressions and source
+  *     `schema` DDL are syntax-checked at parse time, naming the dataflow
+  *     and the transformation or source;
   *   - sources may carry an optional explicit `schema` (DDL string) — at
   *     100 TB, schema inference is an extra scan we refuse to pay;
   *   - sinks may carry an optional `topic` (the reference hardcodes
@@ -169,6 +174,16 @@ object MetadataReader {
     * instead of the descriptive parse-time error this module promises. */
   private def orNil[A](xs: Seq[A]): Seq[A] = Option(xs).getOrElse(Nil)
 
+  /** Parse-time syntax check of a Spark SQL string (`what` in `where`):
+    * a typo fails HERE, naming its dataflow, rather than at job submit
+    * inside Catalyst, which for a stream is inside the first micro-batch
+    * after the query has started. Spark 4's `functions.expr` defers
+    * parsing to analysis, so the parser is invoked directly. */
+  private def parseChecked(where: String, what: String, text: String)(parse: String => Any): Unit =
+    try { parse(text); () }
+    catch { case ex: Exception => throw new IllegalArgumentException(
+      s"$where: unparseable $what '$text': ${ex.getMessage}", ex) }
+
   private def validateDataflow(d: RawDataflow): DataflowConf = {
     require(orNil(d.sources).nonEmpty, s"dataflow '${d.name}': at least one source required")
     val transforms = orNil(d.transformations).map { t =>
@@ -178,6 +193,8 @@ object MetadataReader {
         case "add_fields" =>
           val fs = params.addFields.getOrElse(throw new IllegalArgumentException(
             s"dataflow '${d.name}', transformation '${t.name}': add_fields requires params.addFields"))
+          fs.foreach(f => parseChecked(s"dataflow '${d.name}', transformation '${t.name}'",
+            s"add_fields function of field '${f.name}'", f.function)(CatalystSqlParser.parseExpression))
           AddFieldsConf(t.name, params.input, fs.map(f => FieldDef(f.name, f.function)))
         case "validate_fields" =>
           val vs = params.validations.getOrElse(throw new IllegalArgumentException(
@@ -198,14 +215,8 @@ object MetadataReader {
             throw new IllegalArgumentException(
               s"dataflow '${d.name}', transformation '${t.name}': " +
               "filter_expr requires params.expr"))
-          // parse-time syntax check — a typo should fail HERE with the
-          // dataflow context, not at job submit inside Catalyst (Spark
-          // 4's functions.expr defers parsing to analysis, so invoke
-          // the parser directly)
-          try org.apache.spark.sql.catalyst.parser.CatalystSqlParser.parseExpression(e)
-          catch { case ex: Exception => throw new IllegalArgumentException(
-            s"dataflow '${d.name}', transformation '${t.name}': " +
-            s"unparseable filter expression '$e': ${ex.getMessage}") }
+          parseChecked(s"dataflow '${d.name}', transformation '${t.name}'",
+            "filter expression", e)(CatalystSqlParser.parseExpression)
           FilterConf(t.name, params.input, e)
         case other => throw new IllegalArgumentException(
           s"dataflow '${d.name}', transformation '${t.name}': unknown type '$other' " +
@@ -218,8 +229,11 @@ object MetadataReader {
       SinkConf(s.input, s.name, orNil(s.paths), s.format, s.saveMode, s.topic,
         s.partitionBy.getOrElse(Nil))
     }
-    DataflowConf(d.name,
-      orNil(d.sources).map(s => SourceConf(s.name, s.path, s.format, s.schema)),
-      transforms, sinks)
+    val sources = orNil(d.sources).map { s =>
+      s.schema.foreach(parseChecked(s"dataflow '${d.name}', source '${s.name}'",
+        "schema", _)(StructType.fromDDL))
+      SourceConf(s.name, s.path, s.format, s.schema)
+    }
+    DataflowConf(d.name, sources, transforms, sinks)
   }
 }

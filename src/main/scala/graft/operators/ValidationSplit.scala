@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.storage.StorageLevel
 import graft.config.{FieldRules, MatchesRegex, MinLength, NotEmpty, NotNull, ValidationRule}
 
@@ -29,6 +30,18 @@ import graft.config.{FieldRules, MatchesRegex, MinLength, NotEmpty, NotNull, Val
   * the shared (optionally persisted) result — at 100 TB the input is read
   * once, not twice. No shuffle is introduced at all: validation is a
   * narrow, codegen'd projection (all built-in expressions, no UDFs).
+  *
+  * A persisted split whose input's planned size (Catalyst's file-size
+  * estimate, read off the analyzed plan: no job) is at most
+  * `spark.sql.adaptive.coalescePartitions.minPartitionSize` is persisted
+  * as ONE partition. That is the smallest partition AQE makes, so any
+  * shuffle over such an input would be coalesced to one partition anyway;
+  * persisted as one, the cached relation reports `SinglePartition` and the
+  * consumers pay no shuffle at all: a `deduplicate` window plans with no
+  * `Exchange`, and each sink path gets one file. A small streaming
+  * micro-batch is the case this is for. Larger inputs, and inputs of
+  * unknown size (stats at `spark.sql.defaultSizeInBytes`, e.g. Kafka),
+  * keep their partitioning.
   */
 object ValidationSplit {
 
@@ -64,10 +77,19 @@ object ValidationSplit {
     def unpersist(): Unit = { shared.unpersist(); () }
   }
 
+  /** Whether `df`'s planned size is at most AQE's smallest partition
+    * (see "Scale"). Reads plan statistics only; runs no job. */
+  private def fitsOnePartition(df: DataFrame): Boolean =
+    df.queryExecution.analyzed.stats.sizeInBytes <=
+      df.sparkSession.sessionState.conf.getConf(SQLConf.COALESCE_PARTITIONS_MIN_PARTITION_SIZE)
+
   /** Split into OK/KO over ONE scan of `df`. */
   def split(df: DataFrame, rules: Seq[FieldRules], persist: Boolean = true): Split = {
     val annotated = withErrors(df, rules)
-    val shared = if (persist) annotated.persist(StorageLevel.MEMORY_AND_DISK) else annotated
+    val shared =
+      if (!persist) annotated
+      else (if (fitsOnePartition(df)) annotated.coalesce(1) else annotated)
+        .persist(StorageLevel.MEMORY_AND_DISK)
     val ok = shared.filter(size(col(ErrorCol)) === 0).drop(ErrorCol)
     val ko = shared.filter(size(col(ErrorCol)) > 0)
     Split(ok, ko, shared)

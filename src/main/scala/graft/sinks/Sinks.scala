@@ -89,7 +89,11 @@ object Sinks {
     * whose target directories are equal or nested share
     * FileOutputCommitter's `_temporary` under the target (and an
     * overwrite of the outer one deletes the inner), so they run one
-    * after another, in declaration order, on one side.
+    * after another, in declaration order, on one side. Without
+    * `repartition`, a write has the partitions of its split: a split
+    * [[graft.operators.ValidationSplit]] persisted as one partition (a
+    * small input) is written as one file per path, and an OK path
+    * curated by `deduplicate` needs no shuffle.
     *
     * Failure contract (that of `Par.all`): every write runs to the end,
     * and the call returns or throws only after all have finished — an

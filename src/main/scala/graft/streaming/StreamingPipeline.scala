@@ -43,7 +43,10 @@ object StreamingPipeline {
     spark.readStream.format(format.toLowerCase).schema(schema).load(path)
 
   /** Streaming dataflow: validation-split fan-out per micro-batch.
-    * Each micro-batch is persisted once, and [[Sinks.persist]] submits
+    * Each micro-batch is persisted once (as one partition when it is
+    * planned at or below AQE's smallest partition, see
+    * [[ValidationSplit]]: then its `deduplicate` runs without a shuffle
+    * and each sink path gets one file per batch), and [[Sinks.persist]] submits
     * all of its writes (every sink path, plus every Kafka publish) at
     * once, so `addBatch` takes about as long as the slowest write.
     * `persist` returns only after every write has finished, even when

@@ -86,4 +86,18 @@ class DocsSpec extends AnyFunSuite {
     }
     assert(starters.isEmpty, s"threads started outside graft.Par in: ${starters.mkString(", ")}")
   }
+
+  test("no src/main file sets a spark.sql.adaptive.coalescePartitions key") {
+    // ValidationSplit persists an input at or below AQE's smallest
+    // partition as one partition; that bound stays Spark's own. Matches
+    // the key as a literal (reads go through SQLConf's entry) or the
+    // entry being set.
+    val setter = ("\"spark\\.sql\\.adaptive\\.coalescePartitions\\.|" +
+      raw"(\.config|conf\.set|setConf)\(\s*SQLConf\.COALESCE_PARTITIONS").r
+    assert(setter.findFirstIn(
+      """b.config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "1b")""").isDefined)
+    val setters = mainSources.filter(p => setter.findFirstIn(read(p)).isDefined)
+    assert(mainSources.nonEmpty && setters.isEmpty,
+      s"spark.sql.adaptive.coalescePartitions.* set in: ${setters.mkString(", ")}")
+  }
 }

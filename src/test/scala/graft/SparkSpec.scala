@@ -14,9 +14,13 @@ object SparkSpec {
 
   /** Run `f` with AQE off, so `executedPlan` shows every exchange
     * statically instead of one unexpanded adaptive leaf. */
-  def aqeOff[A](spark: SparkSession)(f: => A): A = {
-    val prev = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try f finally spark.conf.set("spark.sql.adaptive.enabled", prev)
+  def aqeOff[A](spark: SparkSession)(f: => A): A =
+    withConf(spark, "spark.sql.adaptive.enabled" -> "false")(f)
+
+  /** Run `f` with one SQL conf key set on `spark`, then restore it. */
+  def withConf[A](spark: SparkSession, kv: (String, String))(f: => A): A = {
+    val prev = spark.conf.get(kv._1)
+    spark.conf.set(kv._1, kv._2)
+    try f finally spark.conf.set(kv._1, prev)
   }
 }

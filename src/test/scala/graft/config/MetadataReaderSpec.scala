@@ -96,6 +96,18 @@ class MetadataReaderSpec extends AnyFunSuite {
     val badExpr = good.replace("age >= 18", "age >>>= (")
     assert(intercept[IllegalArgumentException](MetadataReader.parse(badExpr))
       .getMessage.contains("unparseable filter expression"))
+    // add_fields functions and source schemas are syntax-checked as well,
+    // naming the dataflow and the transformation or source
+    val badField = referenceShaped.replace("\"current_timestamp\"", "\"upper(name\"")
+    val e1 = intercept[IllegalArgumentException](MetadataReader.parse(badField)).getMessage
+    assert(Seq("prueba-acceso", "ok_with_date", "'dt'", "upper(name").forall(e1.contains), e1)
+    val withSchema = referenceShaped.replace("\"format\": \"JSON\"}",
+      "\"format\": \"JSON\", \"schema\": \"name STRING, age BIGINT\"}")
+    assert(MetadataReader.parse(withSchema).dataflows.head.sources.head.schema
+      .contains("name STRING, age BIGINT"))
+    val badSchema = withSchema.replace("age BIGINT", "age")
+    val e2 = intercept[IllegalArgumentException](MetadataReader.parse(badSchema)).getMessage
+    assert(Seq("prueba-acceso", "person_inputs", "unparseable schema").forall(e2.contains), e2)
   }
 
   test("parses extension rules with arguments") {

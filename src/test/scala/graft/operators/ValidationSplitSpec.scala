@@ -1,8 +1,12 @@
 package graft.operators
 
+import java.nio.file.Files
+
 import graft.SparkSpec
 import graft.config._
+import graft.plans.PipelineRunner
 import org.apache.spark.sql.Row
+import org.apache.spark.sql.execution.exchange.Exchange
 
 /** Truth table for the OK/KO split, including the reference's fixture rows
   * (`input.json:1-3`) and the null-semantics deviation (SURVEY §7.4.1). */
@@ -75,5 +79,40 @@ class ValidationSplitSpec extends SparkSpec {
     assert(s.ok.count() == 1)
     val errs = s.ko.select($"arraycoderrorbyfield").as[Seq[String]].head()
     assert(errs == Seq("text-minLength", "source-matchesRegex"))
+  }
+
+  test("persisted split of an input below AQE's smallest partition is one partition; no Exchange") {
+    val dir = Files.createTempDirectory("graft_split_small_").toString
+    Seq((1L, 2L, "Ana", Some(20L), "RIO"), (1L, 1L, "Ana", Some(20L), "RIO"),
+        (2L, 1L, "Ben", None, "LIS"), (3L, 1L, "Cai", Some(30L), ""),
+        (4L, 1L, "Dee", Some(40L), "RIO"), (4L, 3L, "Dee", Some(41L), "RIO"),
+        (5L, 1L, "Eve", None, ""))
+      .toDF("id", "ver", "name", "age", "office")
+      .repartition(3).write.mode("overwrite").json(dir)
+    val input = spark.read.schema("id BIGINT, ver BIGINT, name STRING, age BIGINT, office STRING")
+      .json(dir)
+    assert(input.rdd.getNumPartitions >= 2)
+    val dedup = Seq(DeduplicateConf("dd", None, Seq("id"), "ver"))
+    // (partitions of the persisted relation, Exchanges in the curated OK
+    // plan, OK rows, KO rows)
+    def run() = {
+      val s = ValidationSplit.split(input, rules)
+      try {
+        val exchanges = SparkSpec.aqeOff(spark) {
+          PipelineRunner.applyPost(s.ok, dedup).queryExecution.executedPlan
+            .collect { case e: Exchange => e }.size
+        }
+        (s.shared.rdd.getNumPartitions, exchanges,
+          PipelineRunner.applyPost(s.ok, dedup).collect().map(_.toString).sorted.toSeq,
+          s.ko.collect().map(_.toString).sorted.toSeq)
+      } finally s.unpersist()
+    }
+    val (parts, exchanges, ok, ko) = run()
+    assert(parts == 1 && exchanges == 0)
+    val (bigParts, bigExchanges, bigOk, bigKo) = SparkSpec.withConf(spark,
+      "spark.sql.adaptive.coalescePartitions.minPartitionSize" -> "1b")(run())
+    assert(bigParts == input.rdd.getNumPartitions && bigExchanges > 0)
+    assert(ok == bigOk && ko == bigKo)
+    assert(ok.size == 2 && ko.size == 3, s"ok=$ok ko=$ko")
   }
 }

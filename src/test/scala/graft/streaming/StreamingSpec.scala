@@ -68,6 +68,56 @@ class StreamingSpec extends SparkSpec {
     assert(ko.select("name").as[String].collect().toSet == Set("Xabier", "Miguel"))
   }
 
+  test("streaming dataflow: a small micro-batch writes one file per sink path") {
+    val in = Files.createTempDirectory("graft_stream_small_in_").toString
+    val out = Files.createTempDirectory("graft_stream_small_out_").toString
+    val ckpt = Files.createTempDirectory("graft_stream_small_ckpt_").toString
+    // three input files, so three file splits; each holds KO rows, and
+    // file 0 a duplicate id
+    (0 until 3).foreach { f =>
+      val rows = (0 until 4).map { i =>
+        val id = if (f == 0 && i == 1) 0 else f * 10 + i
+        val office = if (i == 3) "" else "RIO"
+        s"""{"id":$id,"ver":$i,"office":"$office"}"""
+      }
+      Files.writeString(java.nio.file.Paths.get(s"$in/part$f.json"), rows.mkString("", "\n", "\n"))
+    }
+    val ddl = "id BIGINT, ver BIGINT, office STRING"
+    val conf = MetadataReader.parse(s"""{
+      "dataflows": [{
+        "name": "small-flow",
+        "sources": [{"name": "in", "path": "$in", "format": "json", "schema": "$ddl"}],
+        "transformations": [
+          {"name": "validation", "type": "validate_fields",
+           "params": {"validations": [{"field": "office", "validations": ["notEmpty"]}]}},
+          {"name": "dd", "type": "deduplicate", "params": {"columns": ["id"], "keepBy": "ver"}}
+        ],
+        "sinks": [
+          {"input": "ok_with_date", "name": "ok", "paths": ["$out/ok1", "$out/ok2"],
+           "format": "parquet", "saveMode": "overwrite"},
+          {"input": "validation_ko", "name": "ko", "paths": ["$out/ko"],
+           "format": "json", "saveMode": "overwrite"}
+        ]
+      }]}""").dataflows.head
+    val source = StreamingPipeline.fileSource(spark, in, "json",
+      org.apache.spark.sql.types.StructType.fromDDL(ddl))
+    assert(spark.read.schema(ddl).json(in).rdd.getNumPartitions == 3)
+    val q = StreamingPipeline.runDataflow(source, conf, ckpt)
+    try q.processAllAvailable() finally q.stop()
+    Seq("ok1/ok", "ok2/ok", "ko/ko").foreach { sink =>
+      val parts = new java.io.File(s"$out/$sink/batch=0").listFiles()
+        .map(_.getName).filter(_.startsWith("part-"))
+      assert(parts.length == 1, s"$sink/batch=0 holds ${parts.mkString(", ")}")
+    }
+    // ids 0-2, 10-12, 20-22 pass (the duplicate id 0 keeps ver 0); 3, 13, 23 fail
+    Seq("ok1", "ok2").foreach { p =>
+      val ok = spark.read.parquet(s"$out/$p/ok").select("id", "ver").as[(Long, Long)].collect()
+      assert(ok.sorted.toSeq == Seq(0L, 2L, 10L, 11L, 12L, 20L, 21L, 22L).map(i => (i, i % 10)), p)
+    }
+    val ko = spark.read.json(s"$out/ko/ko").select("id").as[Long].collect()
+    assert(ko.sorted.toSeq == Seq(3L, 13L, 23L))
+  }
+
   test("watermarked windowed aggregation matches the batch computation") {
     val dir = eventsDir
     val stream = spark.readStream.schema(Tables.events(spark, sf()).schema).parquet(dir)
