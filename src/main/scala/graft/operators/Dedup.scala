@@ -1997,8 +1997,9 @@ object Dedup {
     * 32 buckets at gate scale; production sizes this like any bucketed
     * table (store bytes / executor-memory-sized splits). */
   private val GeoBuckets = 32
-  private def geoBucketCols(rel: (String, String)): Seq[String] =
-    if (rel == StateBands) Seq("band", "sig") else Seq("doc_id")
+  private def geoBucketSpec(rel: (String, String)) =
+    graft.streaming.BucketedFamily.BucketSpec(
+      if (rel == StateBands) Seq("band", "sig") else Seq("doc_id"), GeoBuckets)
   private def geoDir(stateDir: String, rel: (String, String)): String =
     s"$stateDir/${rel._1}"
 
@@ -2050,7 +2051,7 @@ object Dedup {
     val dir = geoDir(stateDir, rel)
     graft.streaming.StreamingPipeline.ensureSchemaCompat(spark, dir, rel._2)
     graft.streaming.BucketedFamily.publishSnapshot(spark, dir, df, version,
-      graft.streaming.BucketedFamily.BucketSpec(geoBucketCols(rel), GeoBuckets))
+      geoBucketSpec(rel))
   }
 
   /** INGEST-ORDER ID HIGH-WATER MARK — the cheap guard enforcing the
@@ -2317,10 +2318,10 @@ object Dedup {
       // acquires its OWN family-dir lease on its thread; the root lease
       // held here stays the single-sweep guard
       graft.Par.all(Seq(
-        () => sp.compactDeltasBucketed(spark, geoDir(stateDir, StateBands),
-          StateBands._2, ver, geoBucketCols(StateBands), GeoBuckets),
-        () => sp.compactDeltasBucketed(spark, geoDir(stateDir, StateShingles),
-          StateShingles._2, ver, geoBucketCols(StateShingles), GeoBuckets)))
+        () => sp.compactDeltas(spark, geoDir(stateDir, StateBands),
+          StateBands._2, ver, bucketed = Some(geoBucketSpec(StateBands))),
+        () => sp.compactDeltas(spark, geoDir(stateDir, StateShingles),
+          StateShingles._2, ver, bucketed = Some(geoBucketSpec(StateShingles)))))
       // superseded ingest-guard markers (every fold below the committed
       // one) are retirement residue, exactly like covered deltas
       val root = new org.apache.hadoop.fs.Path(stateDir)
@@ -2340,7 +2341,7 @@ object Dedup {
     *      geometry families — deleting a doc must hide it from bands
     *      AND shingles in the same logical instant);
     *   2. both geometry families run an EXCLUDING compaction
-    *      ([[graft.streaming.StreamingPipeline.compactDeltasExcluding]]):
+    *      ([[graft.streaming.StreamingPipeline.compactDeltas]] `excluding`):
     *      the erased docs' band and shingle rows are physically absent
     *      from the published snapshot's bytes, with that protocol's
     *      full staging/marker/heal crash story;
@@ -2375,12 +2376,12 @@ object Dedup {
       // to stay sequential predates the size-bounded folds, which
       // removed the 32-wide dispatch the two rewrites contended on)
       graft.Par.all(Seq(
-        () => sp.compactDeltasExcludingBucketed(spark, geoDir(stateDir, StateBands),
-          StateBands._2, ver, stateDir, "doc_id",
-          geoBucketCols(StateBands), GeoBuckets),
-        () => sp.compactDeltasExcludingBucketed(spark, geoDir(stateDir, StateShingles),
-          StateShingles._2, ver, stateDir, "doc_id",
-          geoBucketCols(StateShingles), GeoBuckets)))
+        () => sp.compactDeltas(spark, geoDir(stateDir, StateBands),
+          StateBands._2, ver, excluding = Some((stateDir, Seq("doc_id"))),
+          bucketed = Some(geoBucketSpec(StateBands))),
+        () => sp.compactDeltas(spark, geoDir(stateDir, StateShingles),
+          StateShingles._2, ver, excluding = Some((stateDir, Seq("doc_id"))),
+          bucketed = Some(geoBucketSpec(StateShingles)))))
       val labels = st.read(spark, clusters, StateLabels._1, StateLabels._2)
       val sizes = st.read(spark, clusters, StateSizes._1, StateSizes._2)
       // surviving members of the affected components — the only docs

@@ -35,10 +35,9 @@ import org.apache.spark.sql.types.StructType
   * plain (legacy) snapshot and reads degrade gracefully to the
   * unbucketed scan; a marker this build cannot parse is a loud error.
   *
-  * Publish runs the same crash protocol as
-  * [[StreamingPipeline.publishSnapshot]]: staged write + commit marker
-  * + one atomic rename on rename-protocol filesystems; direct write
-  * with the commit marker LAST on object stores. Every existing reader
+  * Publish is [[StreamingPipeline.publishSnapshot]]'s protocol with a
+  * bucketed `write`; the layout marker lands before the commit marker,
+  * so a committed snapshot always carries its layout. Every existing reader
   * ([[StreamingPipeline.storeContents]], fsck, erasure folds) keeps
   * working unchanged — the snapshot's data files are ordinary parquet;
   * only probe paths that opt in via [[readSnapshot]] see the layout. */
@@ -128,51 +127,13 @@ object BucketedFamily {
   }
 
   /** Publish `contents` as the bucketed `v=<version>` snapshot of a
-    * delta family — [[StreamingPipeline.publishSnapshot]]'s exact crash
-    * protocol (staged+rename vs direct+marker-last, park/heal for
-    * in-place refolds, lease fencing) with the bucketed writer and the
-    * layout marker in place of the plain parquet write. */
+    * delta family through [[StreamingPipeline.publishSnapshot]], with the
+    * bucketed writer and the layout marker as its `write`. */
   def publishSnapshot(spark: SparkSession, dir: String, contents: DataFrame,
                       version: Long, spec: BucketSpec): Unit = {
-    val base = new Path(dir)
-    val fs = fsOf(spark, base)
-    val target = new Path(base, s"v=$version")
-    def park(): Option[Path] =
-      if (!fs.exists(target)) None
-      else {
-        val parked = new Path(base, s"${StreamingPipeline.ReplacedPrefix}$version")
-        fs.delete(parked, true)
-        require(fs.rename(target, parked),
-          s"bucketed publish: park $target -> $parked failed")
-        Some(parked)
-      }
-    def markers(in: Path): Unit = {
-      writeSpec(spark, in, spec)
-      val out = fs.create(new Path(in, StreamingPipeline.CommitMarkerName), true)
-      try out.write(Array.emptyByteArray) finally out.close()
-    }
-    if (StreamingPipeline.objectStoreSemantics(spark, fs)) {
-      MaintenanceLease.fenceCheck(spark, dir)
-      val parked = park()
-      writeBucketedData(spark, contents, target.toString, spec)
-      // commit marker LAST — the atomic publish event on direct-write
-      // filesystems; a crash above leaves an unmarked partial readers
-      // skip and fsck GCs
-      MaintenanceLease.fenceCheck(spark, dir)
-      markers(target)
-      parked.foreach(p => fs.delete(p, true))
-    } else {
-      val staging = new Path(base, s"_compact_staging_v$version")
-      fs.delete(staging, true)
-      // the staged WRITE executes the fold plan (which may read the old
-      // snapshot); only then does the rename publish it
-      writeBucketedData(spark, contents, staging.toString, spec)
-      markers(staging)
-      MaintenanceLease.fenceCheck(spark, dir)
-      val parked = park()
-      require(fs.rename(staging, target),
-        s"bucketed publish: rename $staging -> $target failed")
-      parked.foreach(p => fs.delete(p, true))
+    StreamingPipeline.publishSnapshot(spark, dir, version) { p =>
+      writeBucketedData(spark, contents, p.toString, spec)
+      writeSpec(spark, p, spec)
     }
     // the dir's content under any previously registered name changed
     // (in-place refold at the same version): drop the stale file-listing

@@ -14,18 +14,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * between the writes lands torn, and overwrite itself is
   * delete-then-write (a crash mid-write loses BOTH the old and the new
   * relation). This store publishes every fold as ONE `v=<n>` snapshot
-  * directory holding all member relations as subdirectories, with the
-  * same commit semantics as the delta stores'
-  * [[StreamingPipeline.publishSnapshot]]:
-  *
-  *   - rename-protocol filesystems (local/HDFS): staged write of ALL
-  *     relations + the commit marker, then ONE atomic rename — a crash
-  *     anywhere leaves the previous version serving and an invisible
-  *     `_compact_staging_*` dir the next fold (or fsck) reclaims, never
-  *     a torn state;
-  *   - object stores (rename = copy+delete): direct write of the
-  *     relations, commit marker LAST — an unmarked `v=` dir is a
-  *     crashed partial readers skip and fsck GCs.
+  * directory holding all member relations as subdirectories, through
+  * the delta stores' [[StreamingPipeline.publishSnapshot]] protocol: a
+  * crash anywhere leaves the previous version serving, never a torn
+  * state.
   *
   * Folds are MONOTONIC (each publish is `currentVersion + 1`, never an
   * in-place replace), so the previous snapshot is still on disk while
@@ -37,9 +29,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * Every publish runs under the directory's [[MaintenanceLease]] (two
   * concurrent folds would both read v=N and race their v=N+1 staging),
-  * with [[MaintenanceLease.fenceCheck]] immediately before the publish
-  * rename / marker create. The member-relation names are stamped once
-  * in [[RelationsMarker]] so [[StoreFsck]] can audit a snapshot for
+  * which the protocol's fence checks. The member-relation names are
+  * stamped once in [[RelationsMarker]] so [[StoreFsck]] can audit a snapshot for
   * completeness (a torn state is impossible under this protocol's crash
   * model, but an operator hand-deleting a subdirectory — the incident
   * class fsck exists for — is detectable and reported as an error). */
@@ -94,32 +85,10 @@ object SoftState {
             s"softstate publish: relations ${rels.map(_._1).mkString(",")} " +
               s"do not match the stamped family ${stamped.mkString(",")}")
       }
-      val target = new Path(base, s"v=$version")
-      def writeMarker(in: Path): Unit = {
-        val out = fs.create(new Path(in,
-          StreamingPipeline.CommitMarkerName), true)
-        try out.write(Array.emptyByteArray) finally out.close()
-      }
-      if (StreamingPipeline.objectStoreSemantics(spark, fs)) {
-        MaintenanceLease.fenceCheck(spark, dir)
+      StreamingPipeline.publishSnapshot(spark, dir, version) { p =>
         rels.foreach { case (name, df) =>
-          df.write.mode("overwrite").parquet(new Path(target, name).toString)
+          df.write.mode("overwrite").parquet(new Path(p, name).toString)
         }
-        // marker LAST — the single atomic publish event on direct-write
-        // filesystems; a crash above leaves an unmarked partial readers
-        // skip and fsck GCs
-        MaintenanceLease.fenceCheck(spark, dir)
-        writeMarker(target)
-      } else {
-        val staging = new Path(base, s"_compact_staging_v$version")
-        fs.delete(staging, true)
-        rels.foreach { case (name, df) =>
-          df.write.mode("overwrite").parquet(new Path(staging, name).toString)
-        }
-        writeMarker(staging)
-        MaintenanceLease.fenceCheck(spark, dir)
-        require(fs.rename(staging, target),
-          s"softstate publish: rename $staging -> $target failed")
       }
       // retire superseded snapshots — AFTER commit, and only committed
       // ones below the new version (the staging write above already

@@ -1327,7 +1327,7 @@ object StreamingGates {
     * after batches 0–1 commit, a slice of already-ingested doc_ids is
     * tombstoned ([[StreamingPipeline.writeTombstones]]), BOTH index
     * families are folded with physical exclusion
-    * ([[StreamingPipeline.compactDeltasExcluding]] — the snapshot bytes
+    * (the excluding [[StreamingPipeline.compactDeltas]] — the snapshot bytes
     * no longer contain the deleted rows), and the tombstones are then
     * RETIRED before batch 2 arrives through a restarted query. Serving
     * still goes through [[StreamingPipeline.contentsExcludingTombstones]]
@@ -1372,9 +1372,9 @@ object StreamingGates {
     val q2 = startQ()
     try q2.processAllAvailable() finally q2.stop()
     val postings = StreamingPipeline.contentsExcludingTombstones(spark,
-      s"$idx/postings", "term STRING, doc_id BIGINT, tf BIGINT", idx, "doc_id")
+      s"$idx/postings", "term STRING, doc_id BIGINT, tf BIGINT", idx, Seq("doc_id"))
     val lens = StreamingPipeline.contentsExcludingTombstones(spark,
-      s"$idx/lens", "doc_id BIGINT, n_words INT", idx, "doc_id")
+      s"$idx/lens", "doc_id BIGINT, n_words INT", idx, Seq("doc_id"))
     SearchIndex.bm25TopKFromIndex(postings, lens, Search.QueryTerms)
   }
 
@@ -1569,7 +1569,7 @@ object StreamingGates {
     * a slice of ingested customer ids is tombstoned and ALL THREE store
     * families are folded with physical exclusion — `variants` and
     * `names` on their entity id, and the emitted `pairs` on BOTH
-    * endpoint ids (the multi-key [[StreamingPipeline.compactDeltasExcluding]]:
+    * endpoint ids (the multi-key excluding [[StreamingPipeline.compactDeltas]]:
     * a pair touching an erased entity from either side is itself
     * personal data about that entity and must go). Tombstones are then
     * retired, batch 2 arrives through a restarted query and links

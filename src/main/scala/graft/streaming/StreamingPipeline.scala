@@ -1,5 +1,6 @@
 package graft.streaming
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
@@ -933,7 +934,7 @@ object StreamingPipeline {
     * = exists with no versioned children. */
   private[streaming] def listVersions(spark: SparkSession, dir: String,
                            pattern: scala.util.matching.Regex): Option[Seq[Long]] = {
-    val path = new org.apache.hadoop.fs.Path(dir)
+    val path = new Path(dir)
     val fs = path.getFileSystem(spark.sessionState.newHadoopConf())
     if (!fs.exists(path)) None
     else Some(fs.listStatus(path).toSeq
@@ -987,93 +988,47 @@ object StreamingPipeline {
     * [[graft.streaming.StreamingGates.streamBm25]]) pin against the
     * batch oracles.
     *
-    * Crash safety is a COMPLETENESS-MARKER protocol: a snapshot counts
-    * as published only once a `_GRAFT_COMMITTED` marker exists inside
-    * its `v=<id>` dir — readers ([[deltasBelow]]) ignore unmarked
-    * snapshot dirs entirely, and the next sweep GC's them as crashed
-    * partials. On local FS/HDFS the fold is still staged
-    * (underscore-prefixed dir, invisible to version listing and Hadoop
-    * data listing) and atomically RENAMED into place with the marker
-    * already inside — the fast path, one namespace op. On OBJECT STORES
-    * (s3a/gs/abfs…, where rename is copy+delete and the old refusal
-    * left delta accumulation unbounded) the fold writes DIRECTLY to
-    * `v=<id>` and the marker lands last: a crash mid-write leaves an
-    * unmarked partial that shadows nothing — readers serve the old
-    * state, and re-running the sweep heals (delete partial, refold,
-    * mark). A crash AFTER publish leaves already-folded `b` dirs
-    * behind, which readers skip (ids ≤ snapshot) and the next sweep
-    * deletes. Run while the writing stream is quiesced (between
-    * micro-batches, or stopped — the gates compact at a restart
-    * boundary), and only up to a batch id the checkpoint has COMMITTED:
-    * compacting an uncommitted batch breaks replay isolation, which
-    * [[deltasBelow]] then refuses loudly rather than serving wrong
-    * history. */
+    * Two orthogonal options:
+    *   - `excluding = Some((storeRoot, keyCols))` applies tombstones
+    *     PHYSICALLY: the fold anti-joins the store's current tombstone
+    *     set ([[storeTombstones]] of `storeRoot`), removing a row when
+    *     ANY of `keyCols` is tombstoned (relationship families — ER/ANN
+    *     pair stores — key rows by two entity ids, and erasing an entity
+    *     must remove every pair touching it from either side). Deleted
+    *     keys' rows are then absent from the published snapshot's bytes
+    *     — the erasure half of a right-to-be-forgotten delete, not just
+    *     a serving-time mask. An excluding fold always refolds, even over
+    *     an existing snapshot at this boundary. Tombstones are NOT
+    *     retired here — a store usually has several data families
+    *     (postings + lens, variants + names) sharing one tombstone set,
+    *     and retiring on the first family's sweep would un-delete the key
+    *     everywhere else. Retire them explicitly with
+    *     [[retireTombstones]] once EVERY family has folded past the
+    *     delete ([[eraseFromStore]] composes exactly that).
+    *   - `bucketed = Some(spec)` publishes the fold as a BUCKETED
+    *     snapshot ([[BucketedFamily]]) — the sweep for corpus-sized
+    *     families that later ingests PROBE by equi-join: the layout lets
+    *     the probe plan with no Exchange on the snapshot side. A snapshot
+    *     at this boundary under another layout is refolded.
+    *
+    * Crash safety is [[publishSnapshot]]'s protocol: readers
+    * ([[deltasBelow]]) serve only committed snapshots, this sweep GC's
+    * crashed partials and heals a crashed in-place replace on its way
+    * in, and a crash AFTER publish leaves already-folded `b` dirs behind,
+    * which readers skip (ids ≤ snapshot) and the next sweep deletes. Run
+    * while the writing stream is quiesced (between micro-batches, or
+    * stopped — the gates compact at a restart boundary), and only up to
+    * a batch id the checkpoint has COMMITTED: compacting an uncommitted
+    * batch breaks replay isolation, which [[deltasBelow]] then refuses
+    * loudly rather than serving wrong history. */
   def compactDeltas(spark: SparkSession, dir: String, schema: String,
-                    uptoVersion: Long): Unit =
-    compactDeltas(spark, dir, schema, uptoVersion, None, None)
-
-  /** [[compactDeltas]] publishing the fold as a BUCKETED snapshot
-    * ([[BucketedFamily]]) — the sweep for corpus-sized families that
-    * later ingests PROBE by equi-join: the published layout lets the
-    * probe plan with no Exchange on the snapshot side. Same crash
-    * protocol, markers, and retirement as the plain sweep. */
-  def compactDeltasBucketed(spark: SparkSession, dir: String, schema: String,
-                            uptoVersion: Long, bucketCols: Seq[String],
-                            buckets: Int): Unit =
-    compactDeltas(spark, dir, schema, uptoVersion, None,
-      Some(BucketedFamily.BucketSpec(bucketCols, buckets)))
-
-  /** [[compactDeltasExcluding]] (physical tombstone application) with a
-    * bucketed publish — the erasure fold for probe-facing families: the
-    * tombstoned keys' bytes leave the store AND the Exchange-free
-    * layout survives the rewrite. */
-  def compactDeltasExcludingBucketed(spark: SparkSession, dir: String,
-                                     schema: String, uptoVersion: Long,
-                                     storeRoot: String, keyCol: String,
-                                     bucketCols: Seq[String],
-                                     buckets: Int): Unit =
-    compactDeltas(spark, dir, schema, uptoVersion, Some((storeRoot, Seq(keyCol))),
-      Some(BucketedFamily.BucketSpec(bucketCols, buckets)))
-
-  /** [[compactDeltas]] with PHYSICAL tombstone application: the staged
-    * fold anti-joins the store's current tombstone set
-    * ([[storeTombstones]] of `storeRoot`, matched on `keyCol`), so
-    * deleted keys' rows are genuinely absent from the published
-    * snapshot's bytes — the erasure half of a right-to-be-forgotten
-    * delete, not just a serving-time mask. Crash argument unchanged:
-    * the fold (now filtered) is staged and renamed atomically; a crash
-    * before the rename leaves the old state (tombstones still mask at
-    * serve via [[contentsExcludingTombstones]]), after it the folded
-    * dirs are skipped. Tombstones themselves are NOT retired here — a
-    * store usually has several data families (postings + lens, variants
-    * + names) sharing one tombstone set, and retiring on the first
-    * family's sweep would un-delete the key everywhere else. Retire
-    * them explicitly with [[retireTombstones]] once EVERY family has
-    * folded past the delete. */
-  def compactDeltasExcluding(spark: SparkSession, dir: String, schema: String,
-                             uptoVersion: Long, storeRoot: String,
-                             keyCol: String): Unit =
-    compactDeltas(spark, dir, schema, uptoVersion,
-      Some((storeRoot, Seq(keyCol))), None)
-
-  /** Multi-key variant: a row is removed when ANY of `keyCols` is
-    * tombstoned — the shape for RELATIONSHIP families (ER/ANN pair
-    * stores key rows by TWO entity ids, and erasing an entity must
-    * remove every pair touching it from either side). */
-  def compactDeltasExcluding(spark: SparkSession, dir: String, schema: String,
-                             uptoVersion: Long, storeRoot: String,
-                             keyCols: Seq[String]): Unit =
-    compactDeltas(spark, dir, schema, uptoVersion, Some((storeRoot, keyCols)), None)
-
-  private def compactDeltas(spark: SparkSession, dir: String, schema: String,
-                            uptoVersion: Long,
-                            exclude: Option[(String, Seq[String])],
-                            bucketSpec: Option[BucketedFamily.BucketSpec]): Unit =
+                    uptoVersion: Long,
+                    excluding: Option[(String, Seq[String])] = None,
+                    bucketed: Option[BucketedFamily.BucketSpec] = None): Unit =
    // single-writer enforcement: every sweep step below (heal, GC, park,
    // publish, retire) is crash-safe alone but NOT interleave-safe against
    // a concurrent sweep of the same family — see MaintenanceLease
    MaintenanceLease.withLease(spark, dir) {
-    import org.apache.hadoop.fs.Path
     val base = new Path(dir)
     val fs = base.getFileSystem(spark.sessionState.newHadoopConf())
     // recover any in-place replace that crashed mid-swap BEFORE version
@@ -1113,15 +1068,15 @@ object StreamingPipeline {
     // boundary exists but under a DIFFERENT layout (plain→bucketed
     // upgrade, or a bucket-count change): skipping would silently leave
     // the probe-facing layout stale
-    val layoutUpgrade = bucketSpec.exists(spec =>
+    val layoutUpgrade = bucketed.exists(spec =>
       snaps.contains(uptoVersion) &&
         !BucketedFamily.readSpec(spark, s"$dir/v=$uptoVersion").contains(spec))
-    def publish(contents: DataFrame): Unit = bucketSpec match {
+    def publish(contents: DataFrame): Unit = bucketed match {
       case Some(spec) =>
         BucketedFamily.publishSnapshot(spark, dir, contents, uptoVersion, spec)
       case None => publishSnapshot(spark, dir, contents, uptoVersion)
     }
-    if (exclude.isDefined || layoutUpgrade ||
+    if (excluding.isDefined || layoutUpgrade ||
         !(snaps.contains(uptoVersion) && unfolded.isEmpty)) {
       // fold-shuffle partitioning bounded by the family's actual
       // on-disk bytes (guide §2.5 — scale-adaptive, identity once the
@@ -1133,7 +1088,7 @@ object StreamingPipeline {
         spark, dirBytes(spark, dir))
       graft.Sessions.sized(spark, foldN) { spark =>
       val folded = deltasBelow(spark, dir, schema, uptoVersion + 1)
-      val contents = exclude.fold(folded) { case (storeRoot, keyCols) =>
+      val contents = excluding.fold(folded) { case (storeRoot, keyCols) =>
         antiJoinTombstones(spark, folded, storeRoot, keyCols)
       }
       if (snaps.contains(uptoVersion)) {
@@ -1195,7 +1150,6 @@ object StreamingPipeline {
     * Direct-write filesystems (object stores): only marker-carrying
     * dirs — an unmarked one is a crashed partial that shadows nothing. */
   private[streaming] def committedSnapshots(spark: SparkSession, dir: String): Seq[Long] = {
-    import org.apache.hadoop.fs.Path
     val base = new Path(dir)
     val fs = base.getFileSystem(spark.sessionState.newHadoopConf())
     val all = listVersions(spark, dir, SnapshotName).getOrElse(Seq.empty)
@@ -1209,7 +1163,6 @@ object StreamingPipeline {
     * constant). Metadata-only (one recursive listing, the same price
     * Spark's scan planning pays); 0 for a missing dir. */
   private[graft] def dirBytes(spark: SparkSession, dir: String): Long = {
-    import org.apache.hadoop.fs.Path
     val p = new Path(dir)
     val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
     if (!fs.exists(p)) 0L else fs.getContentSummary(p).getLength
@@ -1231,7 +1184,6 @@ object StreamingPipeline {
     * family without the boundary snapshot — shrunken serving until the
     * heal, never durable loss. */
   private[streaming] def healReplacedSnapshots(spark: SparkSession, dir: String): Unit = {
-    import org.apache.hadoop.fs.Path
     val base = new Path(dir)
     val fs = base.getFileSystem(spark.sessionState.newHadoopConf())
     if (!fs.exists(base)) return
@@ -1252,77 +1204,95 @@ object StreamingPipeline {
       }
   }
 
-  /** Publish `contents` as the family's `v=<uptoVersion>` snapshot.
-    * Local FS/HDFS: staged write (marker included) + atomic rename —
-    * the fast path, one namespace op, a crash never exposes a partial.
-    * Object stores (rename = copy+delete there): direct write, then
-    * the commit marker LAST — a crash mid-write leaves an unmarked dir
-    * readers ignore and the next sweep GC's; the marker create is the
-    * single atomic publish event.
+  /** THE snapshot-publish protocol of every persisted store: plain and
+    * bucketed delta families and [[SoftState]]'s multi-relation
+    * snapshots all publish `v=<version>` through here. `write` fills the
+    * directory it is handed with the snapshot's data files (and any
+    * layout markers); the protocol owns everything else.
+    *
+    * Rename-protocol filesystems (local/HDFS): delete stale staging,
+    * `write` into `_compact_staging_v<version>`, create the commit
+    * marker inside it, fence, park, ONE atomic rename to `v=<version>`,
+    * reclaim the parked dir. A crash never exposes a partial: before
+    * the rename the old state serves and the staging dir is invisible
+    * residue the next publish (or fsck) reclaims.
+    *
+    * Object stores (rename = copy+delete there): fence, park, `write`
+    * DIRECTLY into `v=<version>`, fence again, commit marker LAST,
+    * reclaim. A crash before the marker leaves an unmarked dir readers
+    * ignore and the next sweep GC's; the marker create is the single
+    * atomic publish event.
+    *
+    * Fence BEFORE park on both paths: a sweep whose lease was lost must
+    * perform no namespace mutation on the committed snapshot (parking it
+    * with no replacement would leave readers serving without the
+    * boundary until the next heal). [[MaintenanceLease.fenceCheck]] is a
+    * no-op outside a lease.
     *
     * IN-PLACE REPLACE (target already exists — the excluding refold):
     * the old snapshot is PARKED under [[ReplacedPrefix]] rather than
     * deleted, and reclaimed only after the replacement has fully
     * landed, so a crash anywhere in the swap is recoverable by
     * [[healReplacedSnapshots]]. Callers replacing in place must hand in
-    * contents whose lineage does NOT read the target path lazily
+    * a `write` whose lineage does NOT read the target path lazily
     * ([[compactDeltas]] materializes via localCheckpoint first) — the
-    * park rename invalidates the planned file paths. */
+    * park rename invalidates the planned file paths. Monotonic callers
+    * ([[SoftState]]) never have a committed target, so park is a no-op
+    * for them. */
   private[streaming] def publishSnapshot(spark: SparkSession, dir: String,
-                              contents: DataFrame, uptoVersion: Long,
-                              forceObjectStoreProtocol: Boolean = false): Unit = {
-    import org.apache.hadoop.fs.Path
+                                         version: Long)(write: Path => Unit): Unit = {
     val base = new Path(dir)
     val fs = base.getFileSystem(spark.sessionState.newHadoopConf())
-    val target = new Path(base, s"v=$uptoVersion")
-    val objectStore = forceObjectStoreProtocol || objectStoreSemantics(spark, fs)
+    val target = new Path(base, s"v=$version")
     def park(): Option[Path] =
       if (!fs.exists(target)) None
       else {
-        val parked = new Path(base, s"$ReplacedPrefix$uptoVersion")
+        val parked = new Path(base, s"$ReplacedPrefix$version")
         fs.delete(parked, true)
         require(fs.rename(target, parked),
           s"publishSnapshot: park $target -> $parked failed")
         Some(parked)
       }
+    def commit(in: Path): Unit = {
+      val out = fs.create(new Path(in, CommitMarkerName), true)
+      try out.write(Array.emptyByteArray) finally out.close()
+    }
+    val objectStore = objectStoreSemantics(spark, fs)
+    // underscore prefix: invisible to version listing and data reads
+    val staging = new Path(base, s"_compact_staging_v$version")
+    if (!objectStore) {
+      // the staging WRITE executes the fold plan (which may read the old
+      // snapshot); only then does the rename publish it
+      fs.delete(staging, true)
+      write(staging)
+      commit(staging)
+    }
+    MaintenanceLease.fenceCheck(spark, dir)
+    val parked = park()
     if (objectStore) {
-      // fence BEFORE the park: a lease-lost sweep must not perform ANY
-      // namespace mutation — parking the committed snapshot (possibly
-      // the usurping sweep's fresh one) would leave readers serving
-      // without the boundary until the next heal
-      MaintenanceLease.fenceCheck(spark, dir)
-      val parked = park()
-      contents.write.mode("overwrite").parquet(target.toString)
+      write(target)
       // re-fence: the marker create is the atomic publish event here — a
       // stalled sweep whose lease was TTL-broken mid-write must not commit
       MaintenanceLease.fenceCheck(spark, dir)
-      val out = fs.create(new Path(target, CommitMarkerName), true)
-      try out.write(Array.emptyByteArray) finally out.close()
-      parked.foreach(p => fs.delete(p, true))
-    } else {
-      // the staging WRITE executes the read of the old snapshot + deltas;
-      // only then does the rename publish it under the versioned name
-      val staging = new Path(base, s"_compact_staging_v$uptoVersion")
-      fs.delete(staging, true)
-      contents.write.mode("overwrite").parquet(staging.toString)
-      val out = fs.create(new Path(staging, CommitMarkerName), true)
-      try out.write(Array.emptyByteArray) finally out.close()
-      // fence BEFORE the park: a refused publish must leave the old
-      // snapshot serving (the staging dir is invisible residue the next
-      // sweep GCs), not parked with no replacement
-      MaintenanceLease.fenceCheck(spark, dir)
-      val parked = park()
+      commit(target)
+    } else
       require(fs.rename(staging, target),
         s"publishSnapshot: rename $staging -> $target failed")
-      parked.foreach(p => fs.delete(p, true))
-    }
+    parked.foreach(p => fs.delete(p, true))
   }
+
+  /** [[publishSnapshot]] of one parquet relation — the plain family
+    * snapshot. */
+  private[streaming] def publishSnapshot(spark: SparkSession, dir: String,
+                                         contents: DataFrame, uptoVersion: Long): Unit =
+    publishSnapshot(spark, dir, uptoVersion) { p =>
+      contents.write.mode("overwrite").parquet(p.toString)
+    }
 
   /** Retire everything a committed `v=<uptoVersion>` snapshot covers:
     * every delta dir with id ≤ upto and every older snapshot. */
   private def retireCovered(spark: SparkSession, dir: String,
                             uptoVersion: Long): Unit = {
-    import org.apache.hadoop.fs.Path
     val base = new Path(dir)
     val fs = base.getFileSystem(spark.sessionState.newHadoopConf())
     listVersions(spark, dir, DeltaName).getOrElse(Seq.empty)
@@ -1356,7 +1326,7 @@ object StreamingPipeline {
     * through [[contentsExcludingTombstones]] stops returning the keys'
     * rows (a bounded anti-join — tombstone volume is delete volume, not
     * corpus volume); (2) durably, the next
-    * [[compactDeltasExcluding]] sweep rewrites the folded snapshot
+    * excluding [[compactDeltas]] sweep rewrites the folded snapshot
     * WITHOUT those rows, removing the bytes. Duplicate tombstones are
     * harmless (anti-join), so the call is idempotent at the key level;
     * call it from the driver while the writing stream is quiesced, the
@@ -1396,7 +1366,6 @@ object StreamingPipeline {
   private[streaming] val TombstoneHighWaterFile = "_graft_next_tomb_id"
 
   private[streaming] def readTombstoneHighWater(spark: SparkSession, dir: String): Long = {
-    import org.apache.hadoop.fs.Path
     val p = new Path(dir, TombstoneHighWaterFile)
     val f = p.getFileSystem(spark.sessionState.newHadoopConf())
     if (!f.exists(p)) 0L
@@ -1411,7 +1380,6 @@ object StreamingPipeline {
 
   private def writeTombstoneHighWater(spark: SparkSession, dir: String,
                                       next: Long): Unit = {
-    import org.apache.hadoop.fs.Path
     val p = new Path(dir, TombstoneHighWaterFile)
     val f = p.getFileSystem(spark.sessionState.newHadoopConf())
     val out = f.create(p, true)
@@ -1424,16 +1392,10 @@ object StreamingPipeline {
     storeContents(spark, s"$storeRoot/tombstones", "tomb_id BIGINT")
 
   /** [[storeContents]] minus tombstoned keys — the serving read for any
-    * data family of a store that supports deletes. The anti-join's
-    * build side is the tombstone set (delete-sized, broadcastable),
-    * never the family. */
-  def contentsExcludingTombstones(spark: SparkSession, familyDir: String,
-                                  schema: String, storeRoot: String,
-                                  keyCol: String): DataFrame =
-    contentsExcludingTombstones(spark, familyDir, schema, storeRoot, Seq(keyCol))
-
-  /** Multi-key variant — see the multi-key [[compactDeltasExcluding]]:
-    * a row is hidden when ANY key column is tombstoned. */
+    * data family of a store that supports deletes. A row is hidden when
+    * ANY of `keyCols` is tombstoned (the [[compactDeltas]] `excluding`
+    * rule). The anti-join's build side is the tombstone set
+    * (delete-sized, broadcastable), never the family. */
   def contentsExcludingTombstones(spark: SparkSession, familyDir: String,
                                   schema: String, storeRoot: String,
                                   keyCols: Seq[String]): DataFrame =
@@ -1474,7 +1436,6 @@ object StreamingPipeline {
     * erasure contract). */
   def stampFamilies(spark: SparkSession, storeRoot: String,
                     families: Seq[String]): Unit = {
-    import org.apache.hadoop.fs.Path
     val base = new Path(storeRoot)
     val fs = base.getFileSystem(spark.sessionState.newHadoopConf())
     val p = new Path(base, FamiliesMarker)
@@ -1494,7 +1455,6 @@ object StreamingPipeline {
 
   /** The stamped family set, if the store carries one. */
   def stampedFamilies(spark: SparkSession, storeRoot: String): Option[Set[String]] = {
-    import org.apache.hadoop.fs.Path
     val p = new Path(new Path(storeRoot), FamiliesMarker)
     val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
     if (!fs.exists(p)) None
@@ -1540,8 +1500,8 @@ object StreamingPipeline {
     }
     val tid = writeTombstones(spark, storeRoot, ids)
     families.foreach { f =>
-      compactDeltasExcluding(spark, s"$storeRoot/${f.name}", f.schema,
-        uptoVersion, storeRoot, f.keyCols)
+      compactDeltas(spark, s"$storeRoot/${f.name}", f.schema, uptoVersion,
+        excluding = Some((storeRoot, f.keyCols)))
     }
     retireTombstones(spark, storeRoot, tid)
    }
@@ -1552,11 +1512,11 @@ object StreamingPipeline {
     * fold), but the VERIFY sink's output lives in `batch=<id>` partition
     * dirs and its backlog in `_pending`, both written by the verify
     * stream's own idempotent-overwrite protocol — so those are rewritten
-    * IN PLACE per partition (staged write + swap, the
-    * [[verifyPendingAndCompact]] backlog-swap pattern), preserving the
-    * layout a restarted verify stream expects. A pair naming an erased
-    * doc is personal data about it and goes from the output, the
-    * backlog, AND the dead-letter relation, both endpoints.
+    * IN PLACE per partition ([[stagedSwap]], the backlog's own
+    * rewrite), preserving the layout a restarted verify stream expects.
+    * A pair naming an erased doc is personal data about it and goes
+    * from the output, the backlog, AND the dead-letter relation, both
+    * endpoints.
     *
     * Contract: run with BOTH streams quiesced at a boundary the
     * checkpoint has committed (`uptoVersion` = the newest committed
@@ -1580,7 +1540,6 @@ object StreamingPipeline {
    // swaps must not interleave with a verify sweep or second erasure
    MaintenanceLease.withLease(spark, storeDir) {
     MaintenanceLease.withLease(spark, outDir) {
-    import org.apache.hadoop.fs.Path
     val fs = new Path(outDir).getFileSystem(spark.sessionState.newHadoopConf())
     val tomb = graft.Caches.persist(ids.toDF("__erased"))
     try {
@@ -1589,30 +1548,19 @@ object StreamingPipeline {
           val t = tomb.select(col("__erased").as(s"__e_$i"))
           acc.join(t, acc(c) === t(s"__e_$i"), "left_anti")
         }
-      // staged swap of one directory's contents — the backlog-swap
-      // pattern: the staging write EXECUTES the read of the old files,
-      // so the delete never races it
-      def swap(dir: Path, contents: DataFrame): Unit = {
-        val staging = new Path(dir.getParent,
-          s"_graft_erase_staging_${dir.getName.replace('=', '_')}")
-        fs.delete(staging, true)
-        contents.write.mode("overwrite").parquet(staging.toString)
-        fs.delete(dir, true)
-        require(fs.rename(staging, dir), s"erase swap rename failed for $dir")
-      }
       // 1. the shingle store: standard two-phase erasure on the delta
       // family (mask is immediate via the tombstones; the fold removes
       // the bytes)
       val tid = writeTombstones(spark, storeDir, tomb.select(col("__erased")))
-      compactDeltasExcluding(spark, storeDir, "doc_id BIGINT, h BIGINT",
-        uptoVersion, storeDir, "doc_id")
+      compactDeltas(spark, storeDir, "doc_id BIGINT, h BIGINT", uptoVersion,
+        excluding = Some((storeDir, Seq("doc_id"))))
       // 2. every verified-output partition (incl. `batch=sweep-*`)
       val outBase = new Path(outDir)
       if (fs.exists(outBase)) {
         fs.listStatus(outBase).toSeq
           .filter(s => s.isDirectory && s.getPath.getName.startsWith("batch="))
           .foreach { s =>
-            swap(s.getPath, minusIds(
+            stagedSwap(spark, fs, s.getPath, minusIds(
               spark.read.schema("id_a BIGINT, id_b BIGINT, jaccard DOUBLE")
                 .parquet(s.getPath.toString), Seq("id_a", "id_b")))
           }
@@ -1620,14 +1568,14 @@ object StreamingPipeline {
         // verifyPendingAndCompact leaves it in)
         val pending = new Path(outBase, PendingDirName)
         if (fs.exists(pending))
-          swap(pending, minusIds(pendingCandidates(spark, outDir),
+          stagedSwap(spark, fs, pending, minusIds(pendingCandidates(spark, outDir),
             Seq("id_a", "id_b")))
         // 4. the dead-letter relation: an expired pair naming an erased
         // doc is personal data exactly like a parked one — forensics
         // retention does not outrank the right to be forgotten
         val dead = new Path(outBase, DeadLetterDirName)
         if (fs.exists(dead))
-          swap(dead, minusIds(deadLetterCandidates(spark, outDir),
+          stagedSwap(spark, fs, dead, minusIds(deadLetterCandidates(spark, outDir),
             Seq("id_a", "id_b")))
       }
       // every family holding erased rows has folded/rewritten — retire
@@ -1637,7 +1585,7 @@ object StreamingPipeline {
 
   /** Retire tombstone deltas with id <= `upto` — call ONLY after every
     * data family of the store has been folded past the corresponding
-    * deletes with [[compactDeltasExcluding]] (retiring earlier would
+    * deletes with an excluding [[compactDeltas]] (retiring earlier would
     * un-delete the keys in any family still holding their rows); the
     * composed [[eraseFromStore]] enforces exactly that ordering.
     * Idempotent; a crash mid-loop leaves dirs whose re-application is
@@ -1648,7 +1596,6 @@ object StreamingPipeline {
    // un-delete the keys in the family it has not folded yet (re-entrant
    // under eraseFromStore's root lease)
    MaintenanceLease.withLease(spark, storeRoot) {
-    import org.apache.hadoop.fs.Path
     val dir = s"$storeRoot/tombstones"
     val base = new Path(dir)
     val fs = base.getFileSystem(spark.sessionState.newHadoopConf())
@@ -1694,7 +1641,6 @@ object StreamingPipeline {
   /** The stamped format string, if the family carries one. */
   private[streaming] def readFormat(spark: SparkSession,
                                     dir: String): Option[String] = {
-    import org.apache.hadoop.fs.Path
     val p = new Path(new Path(dir), FormatMarker)
     val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
     if (!fs.exists(p)) None
@@ -1710,7 +1656,6 @@ object StreamingPipeline {
     * overwrites. */
   private[streaming] def writeFormat(spark: SparkSession, dir: String,
                                      format: String): Unit = {
-    import org.apache.hadoop.fs.Path
     val base = new Path(dir)
     val fs = base.getFileSystem(spark.sessionState.newHadoopConf())
     fs.mkdirs(base)
@@ -1726,7 +1671,6 @@ object StreamingPipeline {
     * first-writer path and [[migrateSchemaFold]]'s restamp share it. */
   private def stampSchema(spark: SparkSession, dir: String,
                           ddl: String): Unit = {
-    import org.apache.hadoop.fs.Path
     val base = new Path(dir)
     val fs = base.getFileSystem(spark.sessionState.newHadoopConf())
     fs.mkdirs(base)
@@ -1736,7 +1680,6 @@ object StreamingPipeline {
 
   /** The stamped schema DDL, if the family carries one. */
   def stampedSchema(spark: SparkSession, dir: String): Option[String] = {
-    import org.apache.hadoop.fs.Path
     val p = new Path(new Path(dir), SchemaMarker)
     val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
     if (!fs.exists(p)) None
@@ -1860,7 +1803,6 @@ object StreamingPipeline {
     * accounting this sweep would corrupt. */
   def retainVersions(spark: SparkSession, dir: String, keep: Int): Seq[Long] = {
     require(keep >= 1, s"retainVersions(keep=$keep): must keep >= 1 version")
-    import org.apache.hadoop.fs.Path
     val base = new Path(dir)
     val fs = base.getFileSystem(spark.sessionState.newHadoopConf())
     if (!fs.exists(base)) return Seq.empty
@@ -2088,7 +2030,7 @@ object StreamingPipeline {
     * surfaced as −1, i.e. older than any horizon — a legacy parked pair
     * expires on the first TTL sweep rather than parking forever. */
   def pendingCandidates(spark: SparkSession, outDir: String): DataFrame = {
-    val path = new org.apache.hadoop.fs.Path(s"$outDir/$PendingDirName")
+    val path = new Path(s"$outDir/$PendingDirName")
     val fs = path.getFileSystem(spark.sessionState.newHadoopConf())
     if (!fs.exists(path))
       spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
@@ -2107,7 +2049,7 @@ object StreamingPipeline {
 
   /** The dead-letter relation (empty before the first expiry sweep). */
   def deadLetterCandidates(spark: SparkSession, outDir: String): DataFrame = {
-    val path = new org.apache.hadoop.fs.Path(s"$outDir/$DeadLetterDirName")
+    val path = new Path(s"$outDir/$DeadLetterDirName")
     val fs = path.getFileSystem(spark.sessionState.newHadoopConf())
     if (!fs.exists(path))
       spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
@@ -2142,7 +2084,6 @@ object StreamingPipeline {
   def expirePendingToDeadLetter(spark: SparkSession, outDir: String,
                                 beforeBatch: Long): DataFrame =
    MaintenanceLease.withLease(spark, outDir) {
-    import org.apache.hadoop.fs.Path
     val outPath = new Path(outDir)
     val fs = outPath.getFileSystem(spark.sessionState.newHadoopConf())
     val pending = pendingCandidates(spark, outDir).persist()
@@ -2159,13 +2100,16 @@ object StreamingPipeline {
     deadLetterCandidates(spark, outDir).filter(col("first_seen") < beforeBatch)
    }
 
-  /** Staged replace of one directory's contents — the backlog-swap
-    * pattern factored: the staging write EXECUTES the read of the old
-    * files, so the delete never races it; the rename publishes. */
+  /** Staged replace of one directory's contents — the verify output's
+    * partitions, backlog and dead letter are all rewritten through it:
+    * the staging write EXECUTES the read of the old files, so the delete
+    * never races it; the rename publishes, and a failed rename raises.
+    * Not crash-atomic: a crash between the delete and the rename leaves
+    * the contents only in the staging dir, which the next swap of the
+    * same dir deletes. */
   private def stagedSwap(spark: SparkSession, fs: org.apache.hadoop.fs.FileSystem,
-                         dir: org.apache.hadoop.fs.Path,
-                         contents: DataFrame): Unit = {
-    val staging = new org.apache.hadoop.fs.Path(dir.getParent,
+                         dir: Path, contents: DataFrame): Unit = {
+    val staging = new Path(dir.getParent,
       s"_graft_swap_staging_${dir.getName.replace('=', '_')}")
     fs.delete(staging, true)
     contents.write.mode("overwrite").parquet(staging.toString)
@@ -2229,7 +2173,6 @@ object StreamingPipeline {
    // leased on the output root: the sweep-dir probe, output write and
    // backlog swap must not interleave with another sweep or an erasure
    MaintenanceLease.withLease(spark, outDir) {
-    import org.apache.hadoop.fs.Path
     val outPath = new Path(outDir)
     val fs = outPath.getFileSystem(spark.sessionState.newHadoopConf())
     val pending = pendingCandidates(spark, outDir).persist()
@@ -2247,7 +2190,7 @@ object StreamingPipeline {
       // still-parked rows keep their ORIGINAL first_seen through the
       // rewrite — the TTL sweep's age anchor must survive compaction
       val still = pending.join(idsA, Seq("id_a"), "left_anti")
-        .union(pending.join(idsB, Seq("id_b"), "left_anti"))
+        .unionByName(pending.join(idsB, Seq("id_b"), "left_anti"))
         .distinct()
       val already = spark.read
         .schema("id_a BIGINT, id_b BIGINT, jaccard DOUBLE")
@@ -2260,14 +2203,7 @@ object StreamingPipeline {
         .find(p => !fs.exists(p)).get
       val wrote = !fresh.isEmpty
       if (wrote) fresh.write.mode("overwrite").parquet(sweepDir.toString)
-      // backlog swap: the staging write EXECUTES the read of the old
-      // backlog files; only then is the live dir replaced
-      val staging = new Path(outPath, s"${PendingDirName}_staging")
-      fs.delete(staging, true)
-      still.write.mode("overwrite").parquet(staging.toString)
-      val live = new Path(outPath, PendingDirName)
-      fs.delete(live, true)
-      fs.rename(staging, live)
+      stagedSwap(spark, fs, new Path(outPath, PendingDirName), still)
       if (wrote)
         spark.read.schema("id_a BIGINT, id_b BIGINT, jaccard DOUBLE")
           .parquet(sweepDir.toString)

@@ -100,4 +100,24 @@ class DocsSpec extends AnyFunSuite {
     assert(mainSources.nonEmpty && setters.isEmpty,
       s"spark.sql.adaptive.coalescePartitions.* set in: ${setters.mkString(", ")}")
   }
+
+  test("only StreamingPipeline.scala runs the snapshot-publish protocol") {
+    // one copy of the crash protocol: no other file creates a commit
+    // marker or names the rename protocol's staging dir; fsck matches the
+    // staging prefix only to reclaim it
+    val marker = raw"CommitMarkerName|_GRAFT_COMMITTED".r
+    val creates = raw"\.create\(|createNewFile|Files\.write".r
+    val staging = "_compact_staging_"
+    def publishes(txt: String) =
+      (marker.findFirstIn(txt).isDefined && creates.findFirstIn(txt).isDefined) ||
+        txt.contains(staging)
+    val (home, others) = mainSources.partition(_.endsWith("/streaming/StreamingPipeline.scala"))
+    assert(home.exists(p => publishes(read(p))), "the lint no longer sees the protocol")
+    val copies = others.filter { p =>
+      val txt = read(p)
+      publishes(if (p.endsWith("/streaming/Fsck.scala"))
+        txt.replace(s"""startsWith("$staging")""", "") else txt)
+    }
+    assert(copies.isEmpty, s"snapshot publish outside StreamingPipeline.scala in: ${copies.mkString(", ")}")
+  }
 }

@@ -204,11 +204,11 @@ class FsckSpec extends SparkSpec {
   test("uncommitted snapshot is flagged under object-store semantics and the audit is read-only") {
     val dir = mkStore()
     fs.mkdirs(new Path(dir, "v=0")) // markerless partial
-    spark.conf.set("graft.streaming.forceObjectStoreProtocol", "true")
+    spark.conf.set(StreamingPipeline.ForceObjectStoreConf, "true")
     try {
       val f = findings(dir)
       assert(f.exists(x => x._2 == "uncommitted-snapshot" && x._3 == "warn"), f.toString)
-    } finally spark.conf.unset("graft.streaming.forceObjectStoreProtocol")
+    } finally spark.conf.unset(StreamingPipeline.ForceObjectStoreConf)
     // rename protocol: same dir reads as a legacy pre-marker snapshot
     val f2 = findings(dir)
     assert(f2.exists(x => x._2 == "legacy-unmarked-snapshot" && x._3 == "info"), f2.toString)

@@ -83,7 +83,7 @@ class LeaseSpec extends SparkSpec {
       .write.mode("overwrite").parquet(s"$root/fam/b0")
     StreamingPipeline.stampFamilies(spark, root, Seq("fam"))
     // nested acquisition: root lease (eraseFromStore) + fam-dir lease
-    // (compactDeltasExcluding) + root lease again (retireTombstones)
+    // (excluding compactDeltas) + root lease again (retireTombstones)
     StreamingPipeline.eraseFromStore(spark, root,
       Seq(2L).toDF("doc_id"),
       Seq(StreamingPipeline.StoreFamily("fam", "doc_id BIGINT, h BIGINT",
@@ -224,10 +224,10 @@ class LeaseSpec extends SparkSpec {
         val out = fs.create(p, true)
         try out.write("owner=usurper expiresAtMs=9999999999999".getBytes("UTF-8"))
         finally out.close()
-        intercept[MaintenanceLease.LeaseLostException] {
-          StreamingPipeline.publishSnapshot(spark, dir, contents, 0L,
-            forceObjectStoreProtocol = true)
-        }
+        spark.conf.set(StreamingPipeline.ForceObjectStoreConf, "true")
+        try intercept[MaintenanceLease.LeaseLostException] {
+          StreamingPipeline.publishSnapshot(spark, dir, contents, 0L)
+        } finally spark.conf.unset(StreamingPipeline.ForceObjectStoreConf)
         // the direct write landed bytes but the COMMIT MARKER did not —
         // committedSnapshots must not serve the fenced partial
         assert(!fs.exists(new org.apache.hadoop.fs.Path(dir,

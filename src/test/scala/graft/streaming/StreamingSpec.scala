@@ -490,6 +490,19 @@ class StreamingSpec extends SparkSpec {
     assert(StreamingPipeline.pendingCandidates(spark, out).isEmpty)
   }
 
+  test("backlog sweep keeps still-parked pairs in their parked orientation") {
+    import java.nio.file.{Files => JFiles}
+    val store = JFiles.createTempDirectory("graft_ndv_orient_store_").toString
+    val out = JFiles.createTempDirectory("graft_ndv_orient_out_").toString
+    // docs 1 and 2 are stored; 3 and 9 never arrive
+    Seq((1L, 7L), (2L, 7L)).toDF("doc_id", "h").write.parquet(s"$store/b0")
+    Seq((1L, 2L, 0L), (3L, 9L, 4L), (1L, 9L, 5L)).toDF("id_a", "id_b", "first_seen")
+      .write.parquet(s"$out/${StreamingPipeline.PendingDirName}/batch=0")
+    StreamingPipeline.verifyPendingAndCompact(spark, store, out)
+    assert(StreamingPipeline.pendingCandidates(spark, out)
+      .as[(Long, Long, Long)].collect().toSet == Set((3L, 9L, 4L), (1L, 9L, 5L)))
+  }
+
   test("sessionization runs on the RocksDB state store provider") {
     // HDFS-backed (default) state lives on the executor HEAP — at 100 TB
     // of keyed state that is an OOM; RocksDB spills state to local disk
@@ -703,7 +716,7 @@ class StreamingSpec extends SparkSpec {
         .write.mode("overwrite").parquet(s"$fam/b$b")
     }
     def excluded = StreamingPipeline
-      .contentsExcludingTombstones(spark, fam, schema, store, "id")
+      .contentsExcludingTombstones(spark, fam, schema, store, Seq("id"))
       .as[(Long, Long)].collect().toSet
     def raw = StreamingPipeline.storeContents(spark, fam, schema)
       .as[(Long, Long)].collect().toSet
@@ -725,8 +738,8 @@ class StreamingSpec extends SparkSpec {
     assert(StreamingPipeline.writeTombstones(spark, store,
       Seq(3L).toDF("id")) == 1L)
     // phase 2 — FOLD: the snapshot is written WITHOUT the keys' rows
-    StreamingPipeline.compactDeltasExcluding(spark, fam, schema,
-      uptoVersion = 1, store, "id")
+    StreamingPipeline.compactDeltas(spark, fam, schema,
+      uptoVersion = 1, excluding = Some((store, Seq("id"))))
     val snap = spark.read
       .schema(org.apache.spark.sql.types.StructType.fromDDL(schema))
       .parquet(s"$fam/v=1").as[(Long, Long)].collect().toSet
@@ -1215,6 +1228,7 @@ class StreamingSpec extends SparkSpec {
     // force the no-rename branch on local FS: the snapshot files land in
     // v=N first, the commit marker last — the marker create IS the
     // publish event, so a reader between the two sees the OLD state
+    withObjectStoreSemantics {
     val store = Files.createTempDirectory("graft_ospub_").toString
     val schema = "id BIGINT, v BIGINT"
     spark.range(0, 5).select($"id", ($"id" * 2).as("v"))
@@ -1224,7 +1238,7 @@ class StreamingSpec extends SparkSpec {
     val before = contents
     StreamingPipeline.publishSnapshot(spark, store,
       spark.range(0, 5).select($"id", ($"id" * 2).as("v")),
-      uptoVersion = 0, forceObjectStoreProtocol = true)
+      uptoVersion = 0)
     val marker = new java.io.File(
       s"$store/v=0/${StreamingPipeline.CommitMarkerName}")
     assert(marker.exists(), "direct-write publish must end with the marker")
@@ -1233,11 +1247,13 @@ class StreamingSpec extends SparkSpec {
     // between data write and marker): delete the marker — the partial
     // becomes invisible — then publish again
     marker.delete()
+    assert(StreamingPipeline.committedSnapshots(spark, store).isEmpty)
     assert(contents == before, "unmarked direct-write partial must be invisible")
     StreamingPipeline.publishSnapshot(spark, store,
       spark.range(0, 5).select($"id", ($"id" * 2).as("v")),
-      uptoVersion = 0, forceObjectStoreProtocol = true)
+      uptoVersion = 0)
     assert(contents == before && marker.exists())
+    }
   }
 
   test("signed substring store refuses erasing text never ingested") {
@@ -1502,8 +1518,8 @@ class StreamingSpec extends SparkSpec {
     assert(served == Set((1L, 2L), (5L, 6L)),
       "pairs touching id 3 from either side must be hidden")
     // the excluding fold removes them physically too
-    StreamingPipeline.compactDeltasExcluding(spark, fam, schema,
-      uptoVersion = 0, store, Seq("id_a", "id_b"))
+    StreamingPipeline.compactDeltas(spark, fam, schema,
+      uptoVersion = 0, excluding = Some((store, Seq("id_a", "id_b"))))
     val snap = spark.read
       .schema(org.apache.spark.sql.types.StructType.fromDDL(schema))
       .parquet(s"$fam/v=0").as[(Long, Long)].collect().toSet
