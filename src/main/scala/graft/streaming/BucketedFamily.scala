@@ -131,8 +131,8 @@ object BucketedFamily {
     * bucketed writer and the layout marker as its `write`. */
   def publishSnapshot(spark: SparkSession, dir: String, contents: DataFrame,
                       version: Long, spec: BucketSpec): Unit = {
-    StreamingPipeline.publishSnapshot(spark, dir, version) { p =>
-      writeBucketedData(spark, contents, p.toString, spec)
+    StreamingPipeline.publishSnapshot(spark, dir, version, Seq(contents)) { (dfs, p) =>
+      writeBucketedData(spark, dfs.head, p.toString, spec)
       writeSpec(spark, p, spec)
     }
     // the dir's content under any previously registered name changed

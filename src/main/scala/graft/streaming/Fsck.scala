@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Consistency audit (`fsck`) for the delta stores — the operational
@@ -26,22 +26,20 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * transiently stale, never harmful — the lease read below is guarded
   * so a lease released mid-audit cannot abort it). With `repair = true`
   * the audit additionally APPLIES the repairs it already knows are
-  * benign — exactly what the next sweep's entry pass would do
-  * ([[StreamingPipeline.compactDeltas]] heals/GCs on its way in), taken
+  * benign — exactly what the next sweep's entry pass would do, taken
   * under the same [[MaintenanceLease]] so it cannot interleave with a
   * real sweep:
   *
+  *   - `heal-pending`, `uncommitted-snapshot`, `covered-deltas`,
+  *     `superseded-snapshots` → run the sweeps' own recovery pass
+  *                                ([[StreamingPipeline.recoverStore]]:
+  *                                restore-or-reclaim parked dirs, GC
+  *                                markerless partials — object-store
+  *                                semantics only, on rename-protocol
+  *                                filesystems existence IS commit —
+  *                                and retire what the newest committed
+  *                                snapshot covers);
   *   - `crashed-staging`        → delete the invisible staging dir;
-  *   - `covered-deltas`         → delete delta dirs the newest committed
-  *                                snapshot covers;
-  *   - `superseded-snapshots`   → retire committed snapshots older than
-  *                                the newest;
-  *   - `heal-pending`           → run the parked-snapshot heal
-  *                                ([[StreamingPipeline.healReplacedSnapshots]]);
-  *   - `uncommitted-snapshot`   → delete the markerless partial
-  *                                (object-store semantics only — on
-  *                                rename-protocol filesystems existence
-  *                                IS commit and the finding never fires);
   *   - `lease-break-residue`    → delete the inert `.broken.` sideline.
   *
   * Everything else — the `error` class (stamped-family drift, tombstone
@@ -59,6 +57,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * condition and asserts the finding, and for each benign class that
   * repair + re-audit converges to clean while error findings survive. */
 object StoreFsck {
+
+  /** Staging dirs: the replace protocol's, and the prefixes of the
+    * builds before it (per-snapshot staging, the verify output's swap,
+    * the erase rewrite), which only this audit still reclaims. */
+  private def isStaging(name: String): Boolean =
+    Seq(StreamingPipeline.StagingPrefix, "_compact_staging_",
+      "_graft_swap_staging_", "_graft_erase_staging_").exists(name.startsWith)
 
   final case class Finding(family: String, check: String, severity: String,
                            detail: String, repaired: Boolean = false)
@@ -89,31 +94,25 @@ object StoreFsck {
       return out.map(_._1).toSeq.toDF()
     }
 
-    val children = fs.listStatus(root).toSeq
-    def isFamilyDir(s: FileStatus): Boolean = s.isDirectory && {
-      val n = s.getPath.getName
-      !n.startsWith("_") && n != "tombstones" &&
-        fs.listStatus(s.getPath).exists { c =>
-          val cn = c.getPath.getName
-          StreamingPipeline.DeltaName.findFirstIn(cn).isDefined ||
-            StreamingPipeline.SnapshotName.findFirstIn(cn).isDefined ||
-            cn.startsWith(StreamingPipeline.ReplacedPrefix) ||
-            cn == StreamingPipeline.SchemaMarker ||
-            cn == StreamingPipeline.FormatMarker
-        }
-    }
-    // a parked snapshot ALONE marks a family too: a crash can leave a
-    // store whose only content is the ReplacedPrefix dir (everything
+    // a dir carries delta-store state when it holds a delta, a snapshot,
+    // a stamp or a parked dir — the parked dir ALONE too: a crash can
+    // leave a store whose only content is a parked replace (everything
     // else already retired), and that is exactly when the audit matters
-    val rootIsFamily = children.exists { c =>
+    def carriesStoreState(dir: Path): Boolean = fs.listStatus(dir).exists { c =>
       val n = c.getPath.getName
       StreamingPipeline.DeltaName.findFirstIn(n).isDefined ||
         StreamingPipeline.SnapshotName.findFirstIn(n).isDefined ||
-        n.startsWith(StreamingPipeline.ReplacedPrefix)
+        StreamingPipeline.parkedTarget(n).isDefined ||
+        n == StreamingPipeline.SchemaMarker || n == StreamingPipeline.FormatMarker
     }
+    val rootIsFamily = carriesStoreState(root)
     val familyDirs =
       (if (rootIsFamily) Seq("" -> storeRoot) else Seq.empty) ++
-        children.filter(isFamilyDir)
+        fs.listStatus(root).toSeq
+          .filter(s => s.isDirectory && {
+            val n = s.getPath.getName
+            !n.startsWith("_") && n != "tombstones" && carriesStoreState(s.getPath)
+          })
           .map(s => s.getPath.getName -> s.getPath.toString)
 
     // ---- lease state of one directory, guarded end to end: a lease
@@ -217,29 +216,25 @@ object StoreFsck {
     familyDirs.foreach { case (name, dirStr) =>
       val label = if (name.isEmpty) "<root>" else name
       val dir = new Path(dirStr)
-      val kids = fs.listStatus(dir).toSeq
+      val kids = fs.listStatus(dir).toSeq.filter(_.isDirectory)
+      // the sweeps' own recovery pass, then whether `gone` now holds
+      def recovered(gone: => Boolean): Boolean = {
+        StreamingPipeline.recoverStore(spark, dirStr)
+        gone
+      }
 
-      kids.filter(s => s.isDirectory &&
-          s.getPath.getName.startsWith(StreamingPipeline.ReplacedPrefix))
-        .foreach { s =>
-          val v = s.getPath.getName.stripPrefix(StreamingPipeline.ReplacedPrefix)
-          val replacementLanded = fs.exists(new Path(dir, s"v=$v"))
+      kids.foreach { s =>
+        StreamingPipeline.parkedTarget(s.getPath.getName).foreach { t =>
+          val replacementLanded = StreamingPipeline.landed(fs, new Path(dir, t))
           repairable(Finding(label, "heal-pending", "warn",
-            s"parked snapshot ${s.getPath.getName} from a crashed in-place " +
-              s"replace (replacement v=$v ${if (replacementLanded) "landed"
-              else "MISSING — readers currently serve without this boundary"}); " +
-              "the next sweep heals it")) {
-            // the sweep's own heal, verbatim — restore-or-reclaim
-            StreamingPipeline.healReplacedSnapshots(spark, dirStr)
-            !fs.exists(s.getPath)
-          }
+            s"parked dir ${s.getPath.getName} from a crashed in-place " +
+              s"replace (replacement $t ${if (replacementLanded) "landed"
+              else "MISSING — readers currently serve without it"}); " +
+              "the next sweep heals it"))(recovered(!fs.exists(s.getPath)))
         }
+      }
 
-      kids.filter(s => s.isDirectory && {
-          val n = s.getPath.getName
-          n.startsWith("_compact_staging_") || n.startsWith("_graft_swap_staging_") ||
-            n.startsWith("_graft_erase_staging_")
-        }).foreach { s =>
+      kids.filter(s => isStaging(s.getPath.getName)).foreach { s =>
           repairable(Finding(label, "crashed-staging", "info",
             s"staging dir ${s.getPath.getName} from an interrupted write — " +
               "invisible to readers; the next sweep overwrites or GC's it")) {
@@ -254,12 +249,8 @@ object StoreFsck {
       (allSnaps.toSet -- committed.toSet).toSeq.sorted.foreach { v =>
         repairable(Finding(label, "uncommitted-snapshot", "warn",
           s"v=$v has no commit marker — a crashed direct-write partial; " +
-            "readers ignore it and the next sweep GC's it")) {
-          // re-verify: still uncommitted (a sweep may have marked it)
-          val still = !StreamingPipeline.committedSnapshots(spark, dirStr)
-            .contains(v)
-          if (still) fs.delete(new Path(dir, s"v=$v"), true) else false
-        }
+            "readers ignore it and the next sweep GC's it"))(
+          recovered(!fs.exists(new Path(dir, s"v=$v"))))
       }
       if (!objectStore)
         allSnaps.sorted.foreach { v =>
@@ -272,13 +263,8 @@ object StoreFsck {
       if (committed.size > 1)
         repairable(Finding(label, "superseded-snapshots", "info",
           s"${committed.size} snapshots (newest v=${committed.max}) — older " +
-            "ones are retirement residue; the next sweep reclaims them")) {
-          val now = StreamingPipeline.committedSnapshots(spark, dirStr)
-          now.maxOption.exists { newest =>
-            now.filter(_ < newest)
-              .forall(v => fs.delete(new Path(dir, s"v=$v"), true))
-          }
-        }
+            "ones are retirement residue; the next sweep reclaims them"))(
+          recovered(StreamingPipeline.committedSnapshots(spark, dirStr).size <= 1))
       val deltas = StreamingPipeline.listVersions(spark, dirStr,
         StreamingPipeline.DeltaName).getOrElse(Seq.empty)
       committed.maxOption.foreach { newest =>
@@ -286,16 +272,11 @@ object StoreFsck {
         if (covered > 0)
           repairable(Finding(label, "covered-deltas", "info",
             s"$covered delta dir(s) with id <= v=$newest — readers skip " +
-              "them; the next sweep reclaims them")) {
-            // re-verify the cover under the lease before deleting
-            StreamingPipeline.committedSnapshots(spark, dirStr).maxOption
-              .exists { nowNewest =>
-                StreamingPipeline.listVersions(spark, dirStr,
-                  StreamingPipeline.DeltaName).getOrElse(Seq.empty)
-                  .filter(_ <= nowNewest)
-                  .forall(k => fs.delete(new Path(dir, s"b$k"), true))
-              }
-          }
+              "them; the next sweep reclaims them"))(recovered {
+            val newest = StreamingPipeline.committedSnapshots(spark, dirStr).maxOption
+            StreamingPipeline.listVersions(spark, dirStr, StreamingPipeline.DeltaName)
+              .getOrElse(Seq.empty).forall(k => newest.forall(k > _))
+          })
       }
 
       // multi-relation snapshot completeness ([[SoftState]] families):

@@ -76,7 +76,6 @@ object SoftState {
           "caller resumed from stale state")
       stampedRelations(spark, dir) match {
         case None =>
-          fs.mkdirs(base)
           val out = fs.create(new Path(base, RelationsMarker), true)
           try out.write(rels.map(_._1).mkString(",").getBytes("UTF-8"))
           finally out.close()
@@ -85,17 +84,14 @@ object SoftState {
             s"softstate publish: relations ${rels.map(_._1).mkString(",")} " +
               s"do not match the stamped family ${stamped.mkString(",")}")
       }
-      StreamingPipeline.publishSnapshot(spark, dir, version) { p =>
-        rels.foreach { case (name, df) =>
+      StreamingPipeline.publishSnapshot(spark, dir, version, rels.map(_._2)) { (dfs, p) =>
+        rels.map(_._1).zip(dfs).foreach { case (name, df) =>
           df.write.mode("overwrite").parquet(new Path(p, name).toString)
         }
       }
-      // retire superseded snapshots — AFTER commit, and only committed
-      // ones below the new version (the staging write above already
-      // executed every plan that read them)
-      StreamingPipeline.committedSnapshots(spark, dir)
-        .filter(_ < version)
-        .foreach(v => fs.delete(new Path(base, s"v=$v"), true))
+      // retire superseded snapshots — AFTER commit (the write above
+      // already executed every plan that read them)
+      StreamingPipeline.recoverStore(spark, dir, Some(version))
     }
 
   /** Read one member relation of the newest committed snapshot;

@@ -1124,7 +1124,7 @@ object StreamingGates {
     *   - STORES (quiesced, driver-side):
     *     [[StreamingPipeline.eraseFromNearDupStores]] — tombstone +
     *     excluding fold of the shingle store (the bytes go),
-    *     staged-swap rewrite of every verified-output partition and the
+    *     parked-replace rewrite of every verified-output partition and the
     *     backlog (pairs naming an erased doc from EITHER side go), then
     *     retirement.
     *   - OPERATOR STATE (through the stream): the erase batch also

@@ -867,7 +867,7 @@ object StreamingPipeline {
         .banded(vectors, Similarity.NEARDUP_TABLES, planes, signs)
         .select(col("vec_id"), bandKey(planes))
       publishSnapshot(spark, s"$storeDir/bands", rebanded, uptoVersion)
-      retireCovered(spark, s"$storeDir/bands", uptoVersion)
+      recoverStore(spark, s"$storeDir/bands", Some(uptoVersion))
       writeFormat(spark, s"$storeDir/bands", autoAnnBandFormat(planes))
       // fold the vectors family to the same boundary so both families'
       // per-batch reads stay O(recent deltas) after the re-band sweep
@@ -1029,30 +1029,19 @@ object StreamingPipeline {
    // publish, retire) is crash-safe alone but NOT interleave-safe against
    // a concurrent sweep of the same family — see MaintenanceLease
    MaintenanceLease.withLease(spark, dir) {
-    val base = new Path(dir)
-    val fs = base.getFileSystem(spark.sessionState.newHadoopConf())
-    // recover any in-place replace that crashed mid-swap BEFORE version
-    // accounting — a parked old snapshot whose replacement never landed
-    // must come back, or this sweep would refold from already-retired
-    // deltas and publish a shrunken snapshot
-    healReplacedSnapshots(spark, dir)
+    // the recovery pass BEFORE version accounting: a parked old snapshot
+    // whose replacement never landed must come back, or this sweep would
+    // refold from already-retired deltas and publish a shrunken
+    // snapshot; crashed direct-write partials and covered dirs go too,
+    // so `v=uptoVersion` can be rewritten cleanly
+    recoverStore(spark, dir)
     // the fold must present the family's full stamped schema — a
     // narrower fold would physically DROP a column from the published
     // snapshot; refused here as a contract error instead of surfacing
     // as silent data loss (or, for a type change, as a parquet read
     // error deep inside the fold)
     ensureSchemaCompat(spark, dir, schema)
-    // GC crashed partials first: a snapshot dir committedSnapshots does
-    // not serve is garbage bytes; reclaim before (re)folding so
-    // `v=uptoVersion` can be rewritten cleanly. Only the direct-write
-    // object-store path can produce such a dir — on rename-protocol
-    // filesystems committedSnapshots serves every v= dir (including
-    // legacy pre-marker snapshots), so this set is empty there and a
-    // legacy snapshot is never mistaken for a partial and deleted.
-    val allSnaps = listVersions(spark, dir, SnapshotName).getOrElse(Seq.empty)
     val snaps = committedSnapshots(spark, dir)
-    (allSnaps.toSet -- snaps.toSet)
-      .foreach(v => fs.delete(new Path(base, s"v=$v"), true))
     require(snaps.forall(_ <= uptoVersion),
       s"delta store $dir already compacted past $uptoVersion (v=${snaps.max})")
     val unfolded = listVersions(spark, dir, DeltaName).getOrElse(Seq.empty)
@@ -1091,24 +1080,16 @@ object StreamingPipeline {
       val contents = excluding.fold(folded) { case (storeRoot, keyCols) =>
         antiJoinTombstones(spark, folded, storeRoot, keyCols)
       }
-      if (snaps.contains(uptoVersion)) {
-        // refold IN PLACE over the existing v=uptoVersion snapshot: the
-        // contents READ that snapshot, and the direct-write publish path
-        // deletes the target before writing — materialize first so the
-        // delete never races the read (the staged path's rename ordering
-        // gives this for free, but the protocol choice is per-filesystem)
-        val pinned = contents.localCheckpoint(true)
-        try publish(pinned)
-        finally graft.Caches.freeCheckpoint(pinned)
-      } else publish(contents)
+      // a refold IN PLACE over v=uptoVersion reads that snapshot; the
+      // protocol runs (or pins) that read before it parks the target
+      publish(contents)
       }
     }
     // retire EVERYTHING v=<uptoVersion> now covers — every delta ≤ upto
     // and every older snapshot, not just the ones this run folded, so a
     // sweep that crashed between its publish and its deletes is fully
-    // reclaimed by the next run. A crash anywhere in this loop leaves
-    // dirs readers already skip (ids ≤ the newest snapshot).
-    retireCovered(spark, dir, uptoVersion)
+    // reclaimed by the next run
+    recoverStore(spark, dir, Some(uptoVersion))
    }
 
   /** Completeness marker of the snapshot-publish protocol: a `v=<id>`
@@ -1168,140 +1149,173 @@ object StreamingPipeline {
     if (!fs.exists(p)) 0L else fs.getContentSummary(p).getLength
   }
 
-  /** Name prefix of a PARKED old snapshot during an in-place replace
-    * (the excluding refold rewrites `v=<id>` at its own version).
-    * Underscore prefix = invisible to version listing and data reads. */
-  private[streaming] val ReplacedPrefix = "_compact_replaced_v"
+  /** Name prefixes of the two transient siblings [[replaceDir]] gives a
+    * target dir: the STAGED replacement and the PARKED old contents,
+    * each followed by the target's name with `=` written `~` — Spark's
+    * file index reads an underscore name holding `=` as a partition, so
+    * only this form stays invisible to data reads and version listing. */
+  private[streaming] val StagingPrefix = "_graft_staging_"
+  private[streaming] val ParkedPrefix = "_graft_parked_"
 
-  /** Crash recovery for the in-place snapshot replace: a parked old
-    * `v=<id>` whose replacement never landed (or landed unmarked on a
-    * direct-write filesystem) is renamed back — without this, a sweep
-    * after the crash would see no snapshot at the boundary, refold from
-    * deltas that boundary's EARLIER sweep already retired, and publish
-    * a silently shrunken snapshot. A parked dir whose replacement did
-    * commit is reclaimed. Idempotent; run by every sweep before version
-    * accounting. Readers between the crash and the next sweep see the
-    * family without the boundary snapshot — shrunken serving until the
-    * heal, never durable loss. */
-  private[streaming] def healReplacedSnapshots(spark: SparkSession, dir: String): Unit = {
+  /** The `prefix` sibling of `target`. */
+  private[streaming] def sibling(prefix: String, target: Path): Path =
+    new Path(target.getParent, prefix + target.getName.replace('=', '~'))
+
+  /** Parked snapshots of the builds whose protocol replaced `v=<id>`
+    * only: `_compact_replaced_v<id>`. */
+  private val LegacyParked = "^_compact_replaced_v(-?\\d+)$".r
+
+  /** The name of the dir a parked sibling `name` belongs to, if `name`
+    * is a parked dir. */
+  private[streaming] def parkedTarget(name: String): Option[String] =
+    if (name.startsWith(ParkedPrefix))
+      Some(name.stripPrefix(ParkedPrefix).replace('~', '='))
+    else LegacyParked.findFirstMatchIn(name).map(m => s"v=${m.group(1)}")
+
+  /** Whether a replacement of `target` has landed: its commit marker
+    * exists. Existence alone proves nothing — a live writer may have
+    * re-created the dir after the crash (the verify stream writes
+    * `_pending/batch=<id>`), and that dir must not pass for the
+    * replacement and get the parked contents reclaimed. */
+  private[streaming] def landed(fs: org.apache.hadoop.fs.FileSystem,
+                                target: Path): Boolean =
+    fs.exists(new Path(target, CommitMarkerName))
+
+  /** Restore-or-reclaim one parked dir: reclaimed once its replacement
+    * landed, else renamed back over whatever unmarked partial sits at
+    * the target. */
+  private def heal(fs: org.apache.hadoop.fs.FileSystem, parked: Path,
+                   target: Path): Unit =
+    if (fs.exists(parked)) {
+      if (landed(fs, target)) fs.delete(parked, true)
+      else {
+        fs.delete(target, true)
+        require(fs.rename(parked, target), s"heal: restore $parked -> $target failed")
+      }
+    }
+
+  /** THE recovery pass of every directory [[replaceDir]] writes into —
+    * sweeps run it on entry (and, with `upto`, after their publish),
+    * fsck's repairs, [[SoftState.publish]], [[retireTombstones]] and the
+    * verify stream's start run it too:
+    *   - heal every parked dir under `dir` (restore-or-reclaim): without
+    *     it a sweep after the crash would refold from deltas the
+    *     boundary's earlier sweep already retired, or rewrite a backlog
+    *     it cannot see, and publish the loss;
+    *   - GC `v=` dirs readers do not serve (crashed direct-write
+    *     partials — on rename filesystems every `v=` dir is served);
+    *   - retire every delta with id ≤ `upto` and every snapshot below
+    *     it, `upto` defaulting to the newest committed snapshot — dirs
+    *     readers already skip.
+    * Idempotent; a crash anywhere in it leaves work the next run
+    * finishes. */
+  private[streaming] def recoverStore(spark: SparkSession, dir: String,
+                                      upto: Option[Long] = None): Unit = {
     val base = new Path(dir)
     val fs = base.getFileSystem(spark.sessionState.newHadoopConf())
     if (!fs.exists(base)) return
-    fs.listStatus(base).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith(ReplacedPrefix))
-      .foreach { s =>
-        val v = s.getPath.getName.stripPrefix(ReplacedPrefix)
-        val target = new Path(base, s"v=$v")
-        val landed = fs.exists(target) &&
-          (!objectStoreSemantics(spark, fs) ||
-            fs.exists(new Path(target, CommitMarkerName)))
-        if (landed) fs.delete(s.getPath, true)
-        else {
-          fs.delete(target, true) // unmarked partial replacement, if any
-          require(fs.rename(s.getPath, target),
-            s"healReplacedSnapshots: restore ${s.getPath} -> $target failed")
-        }
-      }
+    fs.listStatus(base).filter(_.isDirectory).foreach { s =>
+      parkedTarget(s.getPath.getName)
+        .foreach(t => heal(fs, s.getPath, new Path(base, t)))
+    }
+    val committed = committedSnapshots(spark, dir)
+    (listVersions(spark, dir, SnapshotName).getOrElse(Seq.empty).toSet -- committed)
+      .foreach(v => fs.delete(new Path(base, s"v=$v"), true))
+    upto.orElse(committed.maxOption).foreach { u =>
+      listVersions(spark, dir, DeltaName).getOrElse(Seq.empty).filter(_ <= u)
+        .foreach(k => fs.delete(new Path(base, s"b$k"), true))
+      committed.filter(_ < u).foreach(v => fs.delete(new Path(base, s"v=$v"), true))
+    }
   }
 
-  /** THE snapshot-publish protocol of every persisted store: plain and
-    * bucketed delta families and [[SoftState]]'s multi-relation
-    * snapshots all publish `v=<version>` through here. `write` fills the
-    * directory it is handed with the snapshot's data files (and any
-    * layout markers); the protocol owns everything else.
+  /** THE directory-replace protocol of every persisted store: delta
+    * families' and [[SoftState]]'s `v=<version>` snapshots
+    * ([[publishSnapshot]]) and the near-dup verify output's partitions,
+    * backlog and dead letter. `write` fills the directory it is handed
+    * from `contents` (as handed back — pinned where they must be); the
+    * protocol owns everything else.
+    *
+    * On entry it heals the target's own parked sibling, as
+    * [[recoverStore]] does. Callers that READ the target before calling
+    * (the backlog sweeps) run [[recoverStore]] first.
     *
     * Rename-protocol filesystems (local/HDFS): delete stale staging,
-    * `write` into `_compact_staging_v<version>`, create the commit
-    * marker inside it, fence, park, ONE atomic rename to `v=<version>`,
-    * reclaim the parked dir. A crash never exposes a partial: before
-    * the rename the old state serves and the staging dir is invisible
-    * residue the next publish (or fsck) reclaims.
+    * `write` into it, create the commit marker inside it, fence, park,
+    * ONE atomic rename onto the target, reclaim the parked dir. The
+    * staging write executes `contents`' plans before the park, so they
+    * may read the target lazily.
     *
     * Object stores (rename = copy+delete there): fence, park, `write`
-    * DIRECTLY into `v=<version>`, fence again, commit marker LAST,
-    * reclaim. A crash before the marker leaves an unmarked dir readers
-    * ignore and the next sweep GC's; the marker create is the single
-    * atomic publish event.
+    * DIRECTLY into the target, fence again, commit marker LAST, reclaim.
+    * The park comes before `write` here, so `contents` are pinned
+    * (eager localCheckpoint) first when the target exists — a lazy read
+    * of it would find its files moved.
     *
     * Fence BEFORE park on both paths: a sweep whose lease was lost must
-    * perform no namespace mutation on the committed snapshot (parking it
-    * with no replacement would leave readers serving without the
-    * boundary until the next heal). [[MaintenanceLease.fenceCheck]] is a
-    * no-op outside a lease.
+    * perform no namespace mutation on the live dir.
+    * [[MaintenanceLease.fenceCheck]] is a no-op outside a lease.
     *
-    * IN-PLACE REPLACE (target already exists — the excluding refold):
-    * the old snapshot is PARKED under [[ReplacedPrefix]] rather than
-    * deleted, and reclaimed only after the replacement has fully
-    * landed, so a crash anywhere in the swap is recoverable by
-    * [[healReplacedSnapshots]]. Callers replacing in place must hand in
-    * a `write` whose lineage does NOT read the target path lazily
-    * ([[compactDeltas]] materializes via localCheckpoint first) — the
-    * park rename invalidates the planned file paths. Monotonic callers
-    * ([[SoftState]]) never have a committed target, so park is a no-op
-    * for them. */
-  private[streaming] def publishSnapshot(spark: SparkSession, dir: String,
-                                         version: Long)(write: Path => Unit): Unit = {
-    val base = new Path(dir)
-    val fs = base.getFileSystem(spark.sessionState.newHadoopConf())
-    val target = new Path(base, s"v=$version")
-    def park(): Option[Path] =
-      if (!fs.exists(target)) None
-      else {
-        val parked = new Path(base, s"$ReplacedPrefix$version")
-        fs.delete(parked, true)
-        require(fs.rename(target, parked),
-          s"publishSnapshot: park $target -> $parked failed")
-        Some(parked)
-      }
+    * The live dir is PARKED, never deleted, and reclaimed only once its
+    * replacement carries the marker, so a crash anywhere leaves the old
+    * contents in place or parked, and the next recovery restores them.
+    * Between park and land readers see the target missing (or, on an
+    * object store, partial) — the park window, until that recovery. */
+  private[streaming] def replaceDir(spark: SparkSession, target: Path,
+                                    contents: Seq[DataFrame])(
+                                    write: (Seq[DataFrame], Path) => Unit): Unit = {
+    val fs = target.getFileSystem(spark.sessionState.newHadoopConf())
+    val parked = sibling(ParkedPrefix, target)
+    heal(fs, parked, target)
+    val objectStore = objectStoreSemantics(spark, fs)
+    val pinned =
+      if (objectStore && fs.exists(target)) contents.map(_.localCheckpoint(true))
+      else contents
     def commit(in: Path): Unit = {
       val out = fs.create(new Path(in, CommitMarkerName), true)
       try out.write(Array.emptyByteArray) finally out.close()
     }
-    val objectStore = objectStoreSemantics(spark, fs)
-    // underscore prefix: invisible to version listing and data reads
-    val staging = new Path(base, s"_compact_staging_v$version")
-    if (!objectStore) {
-      // the staging WRITE executes the fold plan (which may read the old
-      // snapshot); only then does the rename publish it
-      fs.delete(staging, true)
-      write(staging)
-      commit(staging)
-    }
-    MaintenanceLease.fenceCheck(spark, dir)
-    val parked = park()
-    if (objectStore) {
-      write(target)
-      // re-fence: the marker create is the atomic publish event here — a
-      // stalled sweep whose lease was TTL-broken mid-write must not commit
-      MaintenanceLease.fenceCheck(spark, dir)
-      commit(target)
-    } else
-      require(fs.rename(staging, target),
-        s"publishSnapshot: rename $staging -> $target failed")
-    parked.foreach(p => fs.delete(p, true))
+    try {
+      val staging = sibling(StagingPrefix, target)
+      if (!objectStore) {
+        fs.delete(staging, true)
+        write(pinned, staging)
+        commit(staging)
+      }
+      MaintenanceLease.fenceCheck(spark, target.toString)
+      val wasLive = fs.exists(target)
+      if (wasLive)
+        require(fs.rename(target, parked), s"replaceDir: park $target -> $parked failed")
+      if (objectStore) {
+        write(pinned, target)
+        // re-fence: the marker create is the atomic publish event here — a
+        // stalled sweep whose lease was TTL-broken mid-write must not commit
+        MaintenanceLease.fenceCheck(spark, target.toString)
+        commit(target)
+      } else
+        require(fs.rename(staging, target),
+          s"replaceDir: land rename failed: $staging -> $target")
+      if (wasLive) fs.delete(parked, true)
+    } finally if (pinned ne contents) pinned.foreach(graft.Caches.freeCheckpoint(_))
   }
+
+  /** [[replaceDir]] of one parquet relation. */
+  private[streaming] def replaceWith(spark: SparkSession, target: Path,
+                                     contents: DataFrame): Unit =
+    replaceDir(spark, target, Seq(contents)) { (dfs, p) =>
+      dfs.head.write.mode("overwrite").parquet(p.toString)
+    }
+
+  /** [[replaceDir]] on a family's `v=<version>` snapshot. */
+  private[streaming] def publishSnapshot(spark: SparkSession, dir: String,
+                                         version: Long, contents: Seq[DataFrame])(
+                                         write: (Seq[DataFrame], Path) => Unit): Unit =
+    replaceDir(spark, new Path(new Path(dir), s"v=$version"), contents)(write)
 
   /** [[publishSnapshot]] of one parquet relation — the plain family
     * snapshot. */
   private[streaming] def publishSnapshot(spark: SparkSession, dir: String,
                                          contents: DataFrame, uptoVersion: Long): Unit =
-    publishSnapshot(spark, dir, uptoVersion) { p =>
-      contents.write.mode("overwrite").parquet(p.toString)
-    }
-
-  /** Retire everything a committed `v=<uptoVersion>` snapshot covers:
-    * every delta dir with id ≤ upto and every older snapshot. */
-  private def retireCovered(spark: SparkSession, dir: String,
-                            uptoVersion: Long): Unit = {
-    val base = new Path(dir)
-    val fs = base.getFileSystem(spark.sessionState.newHadoopConf())
-    listVersions(spark, dir, DeltaName).getOrElse(Seq.empty)
-      .filter(_ <= uptoVersion)
-      .foreach(k => fs.delete(new Path(base, s"b$k"), true))
-    listVersions(spark, dir, SnapshotName).getOrElse(Seq.empty)
-      .filter(_ < uptoVersion)
-      .foreach(v => fs.delete(new Path(base, s"v=$v"), true))
-  }
+    replaceWith(spark, new Path(new Path(dir), s"v=$uptoVersion"), contents)
 
   /** Full current contents of a delta store family — newest snapshot
     * plus every later delta. The serving read for compacted stores (a
@@ -1350,14 +1364,14 @@ object StreamingPipeline {
     // stale `upto` from before the retirement could then retire the new,
     // unfolded tombstones — un-deleting keys with no error. A persisted
     // high-water marker closes that: next = max(marker, max existing + 1),
-    // so a crash between the delta write and the marker update still
-    // yields a fresh id on the next call (the existing delta bumps the
-    // max), and retirement never lowers the floor.
+    // and retirement never lowers the floor. The marker is bumped BEFORE
+    // the delta write, so a crash between the two leaves an unused id,
+    // never a delta at or above the floor (fsck's `highwater-behind`).
     val existingNext = listVersions(spark, dir, DeltaName)
       .getOrElse(Seq.empty).maxOption.map(_ + 1L).getOrElse(0L)
     val next = math.max(existingNext, readTombstoneHighWater(spark, dir))
-    ids.toDF("tomb_id").write.mode("overwrite").parquet(s"$dir/b$next")
     writeTombstoneHighWater(spark, dir, next + 1L)
+    ids.toDF("tomb_id").write.mode("overwrite").parquet(s"$dir/b$next")
     next
    }
 
@@ -1512,7 +1526,7 @@ object StreamingPipeline {
     * fold), but the VERIFY sink's output lives in `batch=<id>` partition
     * dirs and its backlog in `_pending`, both written by the verify
     * stream's own idempotent-overwrite protocol — so those are rewritten
-    * IN PLACE per partition ([[stagedSwap]], the backlog's own
+    * IN PLACE per partition ([[replaceDir]], as the backlog sweeps
     * rewrite), preserving the layout a restarted verify stream expects.
     * A pair naming an erased doc is personal data about it and goes
     * from the output, the backlog, AND the dead-letter relation, both
@@ -1528,7 +1542,8 @@ object StreamingPipeline {
     * candidates that verify against the purged store, find no rows, and
     * park in `_pending` until the next erase clears them — correct
     * output either way, but state and backlog keep naming the ids.
-    * Re-running this erasure is idempotent. Cost: the
+    * A crash leaves each rewritten dir in place or parked; re-running
+    * this erasure heals the parked ones first and is idempotent. Cost: the
     * store fold prices as one snapshot rewrite, the output rewrite as
     * one pass over the verified pairs — both delete-INDEPENDENT
     * rewrites of store-sized data, the same price every excluding fold
@@ -1537,10 +1552,11 @@ object StreamingPipeline {
                              outDir: String, ids: DataFrame,
                              uptoVersion: Long): Unit =
    // both roots leased: the shingle-store fold and the output/backlog
-   // swaps must not interleave with a verify sweep or second erasure
+   // replaces must not interleave with a verify sweep or second erasure
    MaintenanceLease.withLease(spark, storeDir) {
     MaintenanceLease.withLease(spark, outDir) {
     val fs = new Path(outDir).getFileSystem(spark.sessionState.newHadoopConf())
+    recoverStore(spark, outDir)
     val tomb = graft.Caches.persist(ids.toDF("__erased"))
     try {
       def minusIds(df: DataFrame, cols: Seq[String]): DataFrame =
@@ -1560,7 +1576,7 @@ object StreamingPipeline {
         fs.listStatus(outBase).toSeq
           .filter(s => s.isDirectory && s.getPath.getName.startsWith("batch="))
           .foreach { s =>
-            stagedSwap(spark, fs, s.getPath, minusIds(
+            replaceWith(spark, s.getPath, minusIds(
               spark.read.schema("id_a BIGINT, id_b BIGINT, jaccard DOUBLE")
                 .parquet(s.getPath.toString), Seq("id_a", "id_b")))
           }
@@ -1568,14 +1584,14 @@ object StreamingPipeline {
         // verifyPendingAndCompact leaves it in)
         val pending = new Path(outBase, PendingDirName)
         if (fs.exists(pending))
-          stagedSwap(spark, fs, pending, minusIds(pendingCandidates(spark, outDir),
+          replaceWith(spark, pending, minusIds(pendingCandidates(spark, outDir),
             Seq("id_a", "id_b")))
         // 4. the dead-letter relation: an expired pair naming an erased
         // doc is personal data exactly like a parked one — forensics
         // retention does not outrank the right to be forgotten
         val dead = new Path(outBase, DeadLetterDirName)
         if (fs.exists(dead))
-          stagedSwap(spark, fs, dead, minusIds(deadLetterCandidates(spark, outDir),
+          replaceWith(spark, dead, minusIds(deadLetterCandidates(spark, outDir),
             Seq("id_a", "id_b")))
       }
       // every family holding erased rows has folded/rewritten — retire
@@ -1583,7 +1599,8 @@ object StreamingPipeline {
     } finally tomb.unpersist()
    }}
 
-  /** Retire tombstone deltas with id <= `upto` — call ONLY after every
+  /** Retire tombstone deltas with id <= `upto` ([[recoverStore]] of the
+    * tombstone family up to `upto`) — call ONLY after every
     * data family of the store has been folded past the corresponding
     * deletes with an excluding [[compactDeltas]] (retiring earlier would
     * un-delete the keys in any family still holding their rows); the
@@ -1596,12 +1613,7 @@ object StreamingPipeline {
    // un-delete the keys in the family it has not folded yet (re-entrant
    // under eraseFromStore's root lease)
    MaintenanceLease.withLease(spark, storeRoot) {
-    val dir = s"$storeRoot/tombstones"
-    val base = new Path(dir)
-    val fs = base.getFileSystem(spark.sessionState.newHadoopConf())
-    listVersions(spark, dir, DeltaName).getOrElse(Seq.empty)
-      .filter(_ <= upto)
-      .foreach(k => fs.delete(new Path(base, s"b$k"), true))
+    recoverStore(spark, s"$storeRoot/tombstones", Some(upto))
    }
 
   /** Format stamps for the persisted BLOCKING stores whose rows are
@@ -1716,18 +1728,12 @@ object StreamingPipeline {
     val oldDdl = stampedSchema(spark, dir).getOrElse(
       throw new IllegalArgumentException(
         s"family $dir carries no schema stamp — nothing to migrate from"))
-    healReplacedSnapshots(spark, dir)
+    recoverStore(spark, dir)
     val folded = deltasBelow(spark, dir, oldDdl, uptoVersion + 1)
       .selectExpr(projection.map { case (n, e) => s"($e) AS $n" }: _*)
     val newDdl = folded.schema.toDDL
-    // the fold may replace an existing v=uptoVersion in place —
-    // materialize so the publish never races its own read (the
-    // compactDeltas in-place discipline)
-    val inPlace = committedSnapshots(spark, dir).contains(uptoVersion)
-    val contents = if (inPlace) folded.localCheckpoint(true) else folded
-    try publishSnapshot(spark, dir, contents, uptoVersion)
-    finally if (inPlace) graft.Caches.freeCheckpoint(contents)
-    retireCovered(spark, dir, uptoVersion)
+    publishSnapshot(spark, dir, folded, uptoVersion)
+    recoverStore(spark, dir, Some(uptoVersion))
     stampSchema(spark, dir, newDdl)
     newDdl
    }
@@ -1963,7 +1969,11 @@ object StreamingPipeline {
     * window) rather than scanning an unbounded history. */
   def startNearDupVerify(candidates: DataFrame, storeDir: String,
                          outDir: String, checkpointDir: String,
-                         threshold: Double = 0.5): StreamingQuery =
+                         threshold: Double = 0.5): StreamingQuery = {
+    // restore what a crashed backlog or output replace parked BEFORE the
+    // first batch re-creates `_pending`: the heal would otherwise have to
+    // drop that batch's unmarked backlog to bring the parked one back
+    recoverStore(candidates.sparkSession, outDir)
     candidates.writeStream
       .outputMode(OutputMode.Append)
       .option("checkpointLocation", checkpointDir)
@@ -1994,9 +2004,11 @@ object StreamingPipeline {
             // first_seen = the batch that parked the pair — the age
             // anchor the TTL sweep (expirePendingToDeadLetter) needs; a
             // later compacting rewrite preserves the MINIMUM, so age
-            // survives re-parking and backlog swaps
+            // survives re-parking and backlog replaces
+            // by name: a using-column anti-join puts its key first, so
+            // the second branch comes out as (id_b, id_a)
             val pending = pairs.join(idsA, Seq("id_a"), "left_anti")
-              .union(pairs.join(idsB, Seq("id_b"), "left_anti"))
+              .unionByName(pairs.join(idsB, Seq("id_b"), "left_anti"))
               .distinct()
               .withColumn("first_seen", lit(batchId))
             graft.operators.Dedup.verifyPairs(ready, store, threshold)
@@ -2007,6 +2019,7 @@ object StreamingPipeline {
         }
       }
       .start()
+  }
 
   /** Backlog subdir of [[startNearDupVerify]]'s output. Underscore
     * prefix = hidden to Hadoop file listing, so reading `outDir` for
@@ -2074,10 +2087,12 @@ object StreamingPipeline {
     * cadence, quiesced like [[verifyPendingAndCompact]] — expiry is a
     * policy decision, so it deliberately stays a separate sweep rather
     * than a side effect of verification. Crash safety: dead-letter is
-    * swapped first, backlog second; a crash in between leaves the
-    * expired rows in BOTH (re-running the sweep converges — the
-    * dead-letter union dedups, the backlog rewrite drops them), never
-    * in neither. Idempotent once converged. Returns the dead-letter
+    * replaced first, backlog second ([[replaceDir]]); a crash in between
+    * leaves the expired rows in BOTH (re-running the sweep converges —
+    * the dead-letter union dedups, the backlog rewrite drops them),
+    * never in neither; a crash inside either replace leaves that dir
+    * parked, and the re-run restores it before reading. Idempotent once
+    * converged. Returns the dead-letter
     * entries BELOW the horizon — everything this and earlier sweeps
     * expired at it (a stable view: re-sweeping at the same horizon
     * returns the same rows and moves nothing). */
@@ -2085,7 +2100,7 @@ object StreamingPipeline {
                                 beforeBatch: Long): DataFrame =
    MaintenanceLease.withLease(spark, outDir) {
     val outPath = new Path(outDir)
-    val fs = outPath.getFileSystem(spark.sessionState.newHadoopConf())
+    recoverStore(spark, outDir)
     val pending = pendingCandidates(spark, outDir).persist()
     try {
       val expired = pending.filter(col("first_seen") < beforeBatch)
@@ -2093,29 +2108,12 @@ object StreamingPipeline {
       if (!expired.isEmpty) {
         val dead = deadLetterCandidates(spark, outDir)
           .unionByName(expired).distinct()
-        stagedSwap(spark, fs, new Path(outPath, DeadLetterDirName), dead)
-        stagedSwap(spark, fs, new Path(outPath, PendingDirName), kept)
+        replaceWith(spark, new Path(outPath, DeadLetterDirName), dead)
+        replaceWith(spark, new Path(outPath, PendingDirName), kept)
       }
     } finally pending.unpersist()
     deadLetterCandidates(spark, outDir).filter(col("first_seen") < beforeBatch)
    }
-
-  /** Staged replace of one directory's contents — the verify output's
-    * partitions, backlog and dead letter are all rewritten through it:
-    * the staging write EXECUTES the read of the old files, so the delete
-    * never races it; the rename publishes, and a failed rename raises.
-    * Not crash-atomic: a crash between the delete and the rename leaves
-    * the contents only in the staging dir, which the next swap of the
-    * same dir deletes. */
-  private def stagedSwap(spark: SparkSession, fs: org.apache.hadoop.fs.FileSystem,
-                         dir: Path, contents: DataFrame): Unit = {
-    val staging = new Path(dir.getParent,
-      s"_graft_swap_staging_${dir.getName.replace('=', '_')}")
-    fs.delete(staging, true)
-    contents.write.mode("overwrite").parquet(staging.toString)
-    fs.delete(dir, true)
-    require(fs.rename(staging, dir), s"staged swap rename failed for $dir")
-  }
 
   /** Retry entry point for the pending backlog: re-verify it against
     * the CURRENT shingle store, returning the pairs that are now
@@ -2162,19 +2160,20 @@ object StreamingPipeline {
     * pairs already in `outDir` BEFORE writing, so a sweep replayed
     * after dying between its output write and its backlog rewrite
     * writes an empty delta instead of duplicating output. The backlog
-    * rewrite itself is write-to-staging then swap — the staging write
-    * is the action that drains the old backlog files, so the delete
-    * never races the read. Run sweeps while the verify stream is
-    * quiesced (between micro-batches): a live `_pending/batch=<id>`
-    * write concurrent with the swap is not coordinated. */
+    * rewrite is [[replaceDir]]: a crash leaves the old backlog in place
+    * or parked, and the next sweep (or verify-stream start) restores it
+    * before reading. Run sweeps while the verify stream is quiesced
+    * (between micro-batches): a live `_pending/batch=<id>` write
+    * concurrent with the replace is not coordinated. */
   def verifyPendingAndCompact(spark: SparkSession, storeDir: String,
                               outDir: String,
                               threshold: Double = 0.5): DataFrame =
    // leased on the output root: the sweep-dir probe, output write and
-   // backlog swap must not interleave with another sweep or an erasure
+   // backlog replace must not interleave with another sweep or an erasure
    MaintenanceLease.withLease(spark, outDir) {
     val outPath = new Path(outDir)
     val fs = outPath.getFileSystem(spark.sessionState.newHadoopConf())
+    recoverStore(spark, outDir)
     val pending = pendingCandidates(spark, outDir).persist()
     // backlog-endpoint filter before the distinct — the sweep must not
     // pay a corpus-sized shuffle/cache either (see backlogFilteredStore)
@@ -2203,7 +2202,7 @@ object StreamingPipeline {
         .find(p => !fs.exists(p)).get
       val wrote = !fresh.isEmpty
       if (wrote) fresh.write.mode("overwrite").parquet(sweepDir.toString)
-      stagedSwap(spark, fs, new Path(outPath, PendingDirName), still)
+      replaceWith(spark, new Path(outPath, PendingDirName), still)
       if (wrote)
         spark.read.schema("id_a BIGINT, id_b BIGINT, jaccard DOUBLE")
           .parquet(sweepDir.toString)

@@ -103,21 +103,26 @@ class DocsSpec extends AnyFunSuite {
 
   test("only StreamingPipeline.scala runs the snapshot-publish protocol") {
     // one copy of the crash protocol: no other file creates a commit
-    // marker or names the rename protocol's staging dir; fsck matches the
-    // staging prefix only to reclaim it
+    // marker, renames (Lease.scala's sideline claim aside) or names the
+    // protocol's staging dir; only fsck names the staging dirs of the
+    // builds before it, to reclaim them
     val marker = raw"CommitMarkerName|_GRAFT_COMMITTED".r
     val creates = raw"\.create\(|createNewFile|Files\.write".r
-    val staging = "_compact_staging_"
+    val staging = "_graft_staging_"
+    val legacyStaging = Seq("_compact_staging_", "_graft_swap_staging_")
     def publishes(txt: String) =
       (marker.findFirstIn(txt).isDefined && creates.findFirstIn(txt).isDefined) ||
-        txt.contains(staging)
+        txt.contains(staging) || txt.contains(".rename(")
     val (home, others) = mainSources.partition(_.endsWith("/streaming/StreamingPipeline.scala"))
     assert(home.exists(p => publishes(read(p))), "the lint no longer sees the protocol")
     val copies = others.filter { p =>
       val txt = read(p)
-      publishes(if (p.endsWith("/streaming/Fsck.scala"))
-        txt.replace(s"""startsWith("$staging")""", "") else txt)
+      publishes(if (p.endsWith("/streaming/Lease.scala")) txt.replace(".rename(", "") else txt)
     }
     assert(copies.isEmpty, s"snapshot publish outside StreamingPipeline.scala in: ${copies.mkString(", ")}")
+    val (fsck, rest) = mainSources.partition(_.endsWith("/streaming/Fsck.scala"))
+    assert(fsck.exists(p => legacyStaging.forall(read(p).contains)), "the lint no longer sees fsck's reclaim")
+    val namers = rest.filter(p => legacyStaging.exists(read(p).contains))
+    assert(namers.isEmpty, s"retired staging names outside Fsck.scala in: ${namers.mkString(", ")}")
   }
 }

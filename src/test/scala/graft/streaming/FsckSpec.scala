@@ -25,6 +25,10 @@ class FsckSpec extends SparkSpec {
     dir
   }
 
+  /** Where the replace protocol parks `target` of `dir`. */
+  private def parked(dir: String, target: String): Path =
+    StreamingPipeline.sibling(StreamingPipeline.ParkedPrefix, new Path(dir, target))
+
   private def findings(root: String): Seq[(String, String, String)] =
     StoreFsck.fsckStore(spark, root)
       .select($"family", $"check", $"severity")
@@ -47,11 +51,32 @@ class FsckSpec extends SparkSpec {
   test("crashed in-place replace (parked snapshot) and staging residue are flagged") {
     val dir = mkStore()
     StreamingPipeline.compactDeltas(spark, dir, Schema, 1L)
-    fs.mkdirs(new Path(dir, s"${StreamingPipeline.ReplacedPrefix}1"))
+    fs.mkdirs(parked(dir, "v=1"))
     fs.mkdirs(new Path(dir, "_compact_staging_v2"))
     val f = findings(dir)
     assert(f.exists(x => x._2 == "heal-pending" && x._3 == "warn"), f.toString)
     assert(f.exists(x => x._2 == "crashed-staging" && x._3 == "info"), f.toString)
+  }
+
+  test("residue of the builds before the directory-replace protocol stays healed") {
+    // literal names those builds left: a snapshot parked by the
+    // per-snapshot protocol, its staging, and the verify output's swap
+    // staging
+    val dir = mkStore()
+    StreamingPipeline.compactDeltas(spark, dir, Schema, 1L)
+    assert(fs.rename(new Path(dir, "v=1"), new Path(dir, "_compact_replaced_v1")))
+    fs.mkdirs(new Path(dir, "_compact_staging_v1"))
+    fs.mkdirs(new Path(dir, "_graft_swap_staging__pending"))
+    val f = findings(dir)
+    assert(f.contains(("<root>", "heal-pending", "warn")), f.toString)
+    assert(f.count(_._2 == "crashed-staging") == 2, f.toString)
+    // the next sweep restores the parked snapshot rather than deleting it
+    StreamingPipeline.compactDeltas(spark, dir, Schema, 1L)
+    assert(fs.exists(new Path(dir, "v=1")))
+    assert(!fs.exists(new Path(dir, "_compact_replaced_v1")))
+    assert(StreamingPipeline.storeContents(spark, dir, Schema).count() == 3)
+    StoreFsck.fsckStore(spark, dir, repair = true).collect()
+    assert(findings(dir).map(_._2) == Seq("clean"))
   }
 
   test("tombstone high-water behind the max delta id is an error; live tombstones are info") {
@@ -135,7 +160,7 @@ class FsckSpec extends SparkSpec {
     Seq((9L, 90L)).toDF("doc_id", "h")
       .write.mode("overwrite").parquet(s"$dir/b0")
     fs.mkdirs(new Path(dir, "_compact_staging_v9"))
-    fs.mkdirs(new Path(dir, s"${StreamingPipeline.ReplacedPrefix}1"))
+    fs.mkdirs(parked(dir, "v=1"))
     val sideline = new Path(dir, s"${MaintenanceLease.LeaseName}.broken.test")
     fs.create(sideline, true).close()
     // and one error-class finding: tombstone high-water behind
@@ -156,7 +181,7 @@ class FsckSpec extends SparkSpec {
     // physical state: residue gone, snapshot intact, tombstones untouched
     assert(!fs.exists(new Path(dir, "b0")))
     assert(!fs.exists(new Path(dir, "_compact_staging_v9")))
-    assert(!fs.exists(new Path(dir, s"${StreamingPipeline.ReplacedPrefix}1")))
+    assert(!fs.exists(parked(dir, "v=1")))
     assert(!fs.exists(sideline))
     assert(fs.exists(new Path(dir, "v=1")))
     // re-audit: only the refused error class (and its live-tombstones
@@ -172,7 +197,7 @@ class FsckSpec extends SparkSpec {
     StreamingPipeline.compactDeltas(spark, dir, Schema, 1L)
     // simulate the crash: park v=1 with no replacement landing
     assert(fs.rename(new Path(dir, "v=1"),
-      new Path(dir, s"${StreamingPipeline.ReplacedPrefix}1")))
+      parked(dir, "v=1")))
     StoreFsck.fsckStore(spark, dir, repair = true).collect()
     assert(fs.exists(new Path(dir, "v=1")), "parked snapshot not restored")
     assert(StreamingPipeline.storeContents(spark, dir, Schema).count() == 3)
@@ -242,7 +267,8 @@ class FsckSpec extends SparkSpec {
     // simulate a crash between the two relations of fold 1: staging holds
     // labels only, no marker, no rename — the exact window that used to
     // land TORN under bare overwrite writes
-    labels(1).write.parquet(s"$dir/_compact_staging_v1/labels")
+    labels(1).write.parquet(new Path(StreamingPipeline.sibling(
+      StreamingPipeline.StagingPrefix, new Path(dir, "v=1")), "labels").toString)
     // reads still serve fold 0, both relations consistent
     assert(SoftState.currentVersion(spark, dir).contains(0L))
     assert(SoftState.read(spark, dir, "sizes", "cluster_id BIGINT, m BIGINT")

@@ -6,18 +6,25 @@ import scala.jdk.CollectionConverters._
 
 import graft.SparkSpec
 import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Crash matrix of the one snapshot-publish protocol
-  * ([[StreamingPipeline.publishSnapshot]]) through each of its writers —
-  * plain and bucketed delta-family folds and [[SoftState]] — under both
+/** Crash matrix of the one directory-replace protocol
+  * ([[StreamingPipeline.replaceDir]]) through each of its writers —
+  * plain and bucketed delta-family folds, [[SoftState]], and the near-dup
+  * verify output's backlog sweep, TTL expiry and erasure — under both
   * protocols (rename, and the object-store protocol forced by conf).
   *
   * A clean run of each writer over a pristine store counts its N
   * filesystem mutations ([[FaultFs]]). Then, for every k = 1..N, a copy
   * of the pristine store runs the writer as a process that dies at its
   * k-th mutation, and the spec asserts:
-  *   - readers serve exactly the pre-state or the post-state;
+  *   - readers serve what the writer's `seen` rule admits: for a store
+  *     publish exactly the pre-state or the post-state; for the verify
+  *     output every row the clean run keeps (the backlog sweeps run
+  *     several replaces, so a crash may land between them);
+  *   - either way, anything else is a park window — missing rows only
+  *     while fsck reports the parked dir that holds them;
   *   - [[StoreFsck]] reports nothing beyond reclaimable residue;
   *   - a re-run converges to the no-crash contents, and once fsck has
   *     reclaimed the residue the store audits as the no-crash one does.
@@ -31,12 +38,25 @@ class StoreCrashSpec extends SparkSpec {
 
   private val Schema = "doc_id BIGINT, h BIGINT"
 
+  /** `(pre, post, seen, root, fsck checks)` → whether readers may see
+    * `seen` after a crash. */
+  private type Seen = (Any, Any, Any, String, Set[String]) => Boolean
+
+  /** Exactly the pre- or the post-state, or `parkWindow` — what readers
+    * see while an in-place replace has parked the old snapshot and not
+    * yet landed the new one — while fsck reports the parked snapshot. */
+  private def exactly(parkWindow: Option[Any]): Seen = (pre, post, seen, _, checks) =>
+    seen == pre || seen == post || (parkWindow.contains(seen) && checks("heal-pending"))
+
   /** A store under test: `build` writes the pristine store at a root,
-    * `run` is the writer (and its re-run), `served` what readers see.
-    * `parkWindow` is what readers see while an in-place replace has
-    * parked the old snapshot and not yet landed the new one. */
+    * `run` is the writer (and its re-run), `served` what readers see,
+    * `seen` what they may see after a crash. fsck audits each of
+    * `audited` (paths under the root); `live` names findings a crash may
+    * leave that the re-run clears. */
   private case class Writer(build: String => Unit, run: String => Unit,
-                            served: String => Any, parkWindow: Option[Any] = None)
+                            served: String => Any, seen: Seen = exactly(None),
+                            audited: Seq[String] = Seq(""),
+                            live: Set[String] = Set.empty)
 
   /** Delta family `fam` of 6 docs in three deltas, folded to `v=from`,
     * with doc 2 tombstoned; the writer's excluding fold to `v=2` drops
@@ -64,7 +84,7 @@ class StoreCrashSpec extends SparkSpec {
             .as[(Long, Long)].collect().toSet)
       },
       // the boundary snapshot is gone and every delta it covered retired
-      parkWindow = if (from == 2L) Some((None, None, Set.empty)) else None)
+      seen = exactly(if (from == 2L) Some((None, None, Set.empty)) else None))
   }
 
   /** A two-relation state at `v=0`; the writer publishes `v=1`. */
@@ -87,16 +107,91 @@ class StoreCrashSpec extends SparkSpec {
         read(root, "sizes", "cluster_id BIGINT, m BIGINT")))
   }
 
+  /** The near-dup verify output and its shingle store, and `run` over
+    * their two roots: docs 1 and 2 share every shingle hash, 4 and 5
+    * share none, 3 and 9 never arrive. The output holds one verified
+    * partition, the backlog batch 0 of the live stream parked and a dead
+    * letter — so every replace the writers make parks a live dir. */
+  private def nearDupOutput(live: Set[String] = Set.empty)(
+      run: (String, String) => Unit): Writer = Writer(
+    build = { root =>
+      Seq((1L, 7L), (1L, 8L), (2L, 7L), (2L, 8L), (4L, 40L), (5L, 50L))
+        .toDF("doc_id", "h").write.parquet(s"$root/store/b0")
+      Seq((6L, 7L, 0.9), (1L, 6L, 0.8)).toDF("id_a", "id_b", "jaccard")
+        .write.parquet(s"$root/out/batch=0")
+      Seq((1L, 2L, 0L), (3L, 9L, 5L), (4L, 5L, 1L)).toDF("id_a", "id_b", "first_seen")
+        .write.parquet(s"$root/out/${StreamingPipeline.PendingDirName}/batch=0")
+      Seq((8L, 9L, 0L), (9L, 1L, 0L)).toDF("id_a", "id_b", "first_seen")
+        .write.parquet(s"$root/out/${StreamingPipeline.DeadLetterDirName}")
+    },
+    run = root => run(s"$root/store", s"$root/out"),
+    served = { root =>
+      def rows(df: DataFrame) = df.collect().map(_.toSeq.toList).toSet
+      val out = s"$root/out"
+      Map(
+        "store" -> rows(StreamingPipeline.contentsExcludingTombstones(spark,
+          s"$root/store", Schema, s"$root/store", Seq("doc_id"))),
+        "output" -> rows(spark.read.schema("id_a BIGINT, id_b BIGINT, jaccard DOUBLE")
+          .parquet(out).select($"id_a", $"id_b", $"jaccard")),
+        "backlog" -> rows(StreamingPipeline.pendingCandidates(spark, out)),
+        "dead" -> rows(StreamingPipeline.deadLetterCandidates(spark, out)))
+    },
+    seen = keptOrParked,
+    audited = Seq("/store", "/out"),
+    live = live)
+
+  /** Every stored doc and every pair the clean run keeps is readable —
+    * in whichever relation, as the sweeps move pairs between the
+    * backlog, the output and the dead letter (so an expired pair is in
+    * the backlog or the dead letter, never in neither) — or sits in a
+    * parked dir while fsck reports it. */
+  private val keptOrParked: Seen = { (_, post, seen, root, checks) =>
+    def keys(view: Any): Set[(String, Any, Any)] =
+      view.asInstanceOf[Map[String, Set[List[Any]]]].toSet[(String, Set[List[Any]])]
+        .flatMap { case (rel, rows) =>
+          rows.map(r => (if (rel == "store") "doc" else "pair", r(0), r(1)))
+        }
+    val lost = keys(post) -- keys(seen)
+    lost.isEmpty || (checks("heal-pending") && lost.subsetOf(parkedPairs(s"$root/out")))
+  }
+
+  private def parkedPairs(out: String): Set[(String, Any, Any)] = {
+    val fs = new Path(out).getFileSystem(spark.sessionState.newHadoopConf())
+    fs.listStatus(new Path(out)).toSeq
+      .filter(s => StreamingPipeline.parkedTarget(s.getPath.getName).isDefined)
+      .flatMap(s => spark.read.schema("id_a BIGINT, id_b BIGINT").parquet(s.getPath.toString)
+        .select($"id_a", $"id_b").collect().map(r => ("pair", r.get(0), r.get(1))))
+      .toSet
+  }
+
+  private val backlogSweep = nearDupOutput() { (store, out) =>
+    StreamingPipeline.verifyPendingAndCompact(spark, store, out)
+  }
+
+  private val ttlExpiry = nearDupOutput() { (_, out) =>
+    StreamingPipeline.expirePendingToDeadLetter(spark, out, beforeBatch = 3L)
+  }
+
+  // a crashed erasure leaves its tombstones registered (serving masks)
+  // until the re-run retires them
+  private val nearDupErase = nearDupOutput(live = Set("live-tombstones")) { (store, out) =>
+    StreamingPipeline.eraseFromNearDupStores(spark, store, out,
+      Seq(1L).toDF("doc_id"), uptoVersion = 0L)
+  }
+
   /** Residue a crash may leave: each is reclaimed by the next sweep or by
     * fsck's repair, or (a dead holder's lease) broken by the next sweep. */
   private val Reclaimable = Set("crashed-staging", "uncommitted-snapshot",
     "heal-pending", "superseded-snapshots", "covered-deltas", "stale-lease",
     "lease-break-residue")
 
-  private def audit(root: String, repair: Boolean = false): Set[(String, String, String)] =
-    StoreFsck.fsckStore(spark, root, repair)
-      .select($"family", $"check", $"severity").as[(String, String, String)]
-      .collect().toSet
+  private def audit(w: Writer, root: String,
+                    repair: Boolean = false): Set[(String, String, String)] =
+    w.audited.flatMap { sub =>
+      StoreFsck.fsckStore(spark, s"$root$sub", repair)
+        .select($"family", $"check", $"severity").as[(String, String, String)]
+        .collect().map { case (f, c, sev) => (s"$sub:$f", c, sev) }
+    }.toSet
 
   private def copyTree(from: JPath, to: JPath): Unit = {
     val walk = Files.walk(from)
@@ -140,10 +235,10 @@ class StoreCrashSpec extends SparkSpec {
       val (_, clean) = fresh("clean")
       val n = FaultFs.count(w.run(clean))
       val post = w.served(clean)
-      val cleanAudit = audit(clean)
+      val cleanAudit = audit(w, clean)
       assert(pre != post, s"$name: the writer must change what readers see")
       assert(n > 0)
-      val allowed = Reclaimable ++ cleanAudit.map(_._2)
+      val allowed = Reclaimable ++ w.live ++ cleanAudit.map(_._2)
       println(s"[crash-matrix] $name: N=$n")
       info(s"N=$n mutations")
       (1 to n).foreach { k =>
@@ -151,20 +246,18 @@ class StoreCrashSpec extends SparkSpec {
         FaultFs.crashAt(k) { try w.run(root) finally drainTasks() }
         expireLeases(local)
         val seen = w.served(root)
-        val residue = audit(root)
-        // the in-place replace's one window: readers serve without the
-        // boundary until the next sweep's heal, which fsck reports
-        assert(seen == pre || seen == post ||
-          (w.parkWindow.contains(seen) && residue.exists(_._2 == "heal-pending")),
-          s"$name, crash at mutation $k/$n: readers see $seen, neither $pre nor $post")
+        val residue = audit(w, root)
+        assert(w.seen(pre, post, seen, root, residue.map(_._2)),
+          s"$name, crash at mutation $k/$n: readers see $seen; pre $pre, post $post, " +
+            s"fsck ${residue.toSeq.sorted}")
         assert(residue.forall(f => allowed(f._2) && f._3 != "error"),
           s"$name, crash at mutation $k/$n: fsck reports ${residue.toSeq.sorted}")
         w.run(root)
         assert(w.served(root) == post, s"$name, crash at mutation $k/$n: re-run diverged")
-        audit(root, repair = true)
-        assert(audit(root) == cleanAudit,
+        audit(w, root, repair = true)
+        assert(audit(w, root) == cleanAudit,
           s"$name, crash at mutation $k/$n: after re-run and repair fsck reports " +
-            s"${audit(root).toSeq.sorted}, the clean run ${cleanAudit.toSeq.sorted}")
+            s"${audit(w, root).toSeq.sorted}, the clean run ${cleanAudit.toSeq.sorted}")
       }
     } finally spark.conf.unset(StreamingPipeline.ForceObjectStoreConf)
   }
@@ -183,6 +276,15 @@ class StoreCrashSpec extends SparkSpec {
     }
     test(s"crash matrix: SoftState publish, $protocol protocol") {
       matrix(s"softstate/$protocol", softState, objectStore)
+    }
+    test(s"crash matrix: verifyPendingAndCompact, $protocol protocol") {
+      matrix(s"backlog-sweep/$protocol", backlogSweep, objectStore)
+    }
+    test(s"crash matrix: expirePendingToDeadLetter, $protocol protocol") {
+      matrix(s"ttl-expiry/$protocol", ttlExpiry, objectStore)
+    }
+    test(s"crash matrix: eraseFromNearDupStores, $protocol protocol") {
+      matrix(s"neardup-erase/$protocol", nearDupErase, objectStore)
     }
   }
 
@@ -208,6 +310,10 @@ class StoreCrashSpec extends SparkSpec {
       .filter(_.contains("staging"))
     assert(staged.length == 1, staged.toSeq)
     assert(spark.read.parquet(s"$out/${staged.head}")
+      .select(col("id_a"), col("id_b")).as[(Long, Long)].collect().toSeq == Seq((3L, 9L)))
+    // a plain re-run restores the parked backlog before reading it
+    StreamingPipeline.verifyPendingAndCompact(spark, store, out)
+    assert(StreamingPipeline.pendingCandidates(spark, out)
       .select(col("id_a"), col("id_b")).as[(Long, Long)].collect().toSeq == Seq((3L, 9L)))
   }
 }

@@ -503,6 +503,55 @@ class StreamingSpec extends SparkSpec {
       .as[(Long, Long, Long)].collect().toSet == Set((3L, 9L, 4L), (1L, 9L, 5L)))
   }
 
+  test("live near-dup verify parks each pair once, in its candidate orientation") {
+    val store = Files.createTempDirectory("graft_ndv_live_orient_store_").toString
+    val out = Files.createTempDirectory("graft_ndv_live_orient_out_").toString
+    val cands = Files.createTempDirectory("graft_ndv_live_orient_cands_").toString
+    // doc 1 is stored; 3 and 9 never arrive
+    Seq((1L, 7L)).toDF("doc_id", "h").write.parquet(s"$store/b0")
+    Seq((3L, 9L), (1L, 9L)).toDF("doc_id", "matched_with").write.mode("append").parquet(cands)
+    val q = StreamingPipeline.startNearDupVerify(
+      spark.readStream.schema("doc_id BIGINT, matched_with BIGINT").parquet(cands),
+      store, out, Files.createTempDirectory("graft_ndv_live_orient_ck_").toString)
+    try q.processAllAvailable() finally q.stop()
+    assert(StreamingPipeline.pendingCandidates(spark, out)
+      .select($"id_a", $"id_b").as[(Long, Long)].collect().toSet == Set((3L, 9L), (1L, 9L)))
+  }
+
+  test("a backlog replace that crashed after its park survives a verify-stream restart") {
+    // the restarted stream re-creates `_pending`; that dir must not pass
+    // for the landed replacement and get the parked backlog reclaimed
+    FaultFs.register(spark.sparkContext.hadoopConfiguration)
+    val store = Files.createTempDirectory("graft_ndv_park_store_").toString
+    val out = FaultFs.uri(Files.createTempDirectory("graft_ndv_park_out_").toString)
+    val cands = Files.createTempDirectory("graft_ndv_park_cands_").toString
+    val ck = Files.createTempDirectory("graft_ndv_park_ck_").toString
+    // doc 1 is stored; 3 and 8 never arrive
+    Seq((1L, 7L)).toDF("doc_id", "h").write.parquet(s"$store/b0")
+    def verifyBatch(doc: Long, matched: Long): Unit = {
+      Seq((doc, matched)).toDF("doc_id", "matched_with")
+        .write.mode("append").parquet(cands)
+      val q = StreamingPipeline.startNearDupVerify(
+        spark.readStream.schema("doc_id BIGINT, matched_with BIGINT").parquet(cands),
+        store, out, ck)
+      try q.processAllAvailable() finally q.stop()
+    }
+    def backlog = StreamingPipeline.pendingCandidates(spark, out)
+      .select($"id_a", $"id_b").as[(Long, Long)].collect().toSet
+    verifyBatch(3L, 1L)
+    assert(backlog == Set((3L, 1L)))
+    // the sweep's backlog replace dies after parking the live backlog
+    intercept[IllegalArgumentException] {
+      FaultFs.failRenamesOnto(StreamingPipeline.PendingDirName) {
+        StreamingPipeline.verifyPendingAndCompact(spark, store, out)
+      }
+    }
+    assert(backlog.isEmpty, "readers see no backlog while it is parked")
+    verifyBatch(8L, 1L)
+    StreamingPipeline.verifyPendingAndCompact(spark, store, out)
+    assert(backlog == Set((3L, 1L), (8L, 1L)))
+  }
+
   test("sessionization runs on the RocksDB state store provider") {
     // HDFS-backed (default) state lives on the executor HEAP — at 100 TB
     // of keyed state that is an OOM; RocksDB spills state to local disk
