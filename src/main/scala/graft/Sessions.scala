@@ -3,16 +3,19 @@ package graft
 import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.graft.Bridge
 
-/** The one place `spark.sql.shuffle.partitions` is decided.
+/** The one place `spark.sql.shuffle.partitions` and the file-listing
+  * parallelism are decided.
   *
   * [[local]] builds the local-mode session of every dev/bench main and of
   * the test suite, at one shuffle partition per core. [[sized]] runs a
-  * region of code at another count without writing the caller's
-  * conf, so concurrent regions on one session cannot leak their counts
-  * into each other or into the session. */
+  * region of code at another count, and [[slotListed]] one whose
+  * distributed file listings run at most one task per slot, without
+  * writing the caller's conf, so concurrent regions on one session
+  * cannot leak their settings into each other or into the session. */
 object Sessions {
 
   private val ShufflePartitions = "spark.sql.shuffle.partitions"
+  private val ListingParallelism = "spark.sql.sources.parallelPartitionDiscovery.parallelism"
 
   /** The AQE keys of Bench's session; the tools that must plan exactly
     * like the bench (JobProfile, ExplainDump) pass the same ones. */
@@ -61,9 +64,35 @@ object Sessions {
     * Stateful streaming fixes its partition count in the checkpoint at
     * the query's first `start()`, so a stream gate starts its queries
     * inside the region. */
-  def sized[A](spark: SparkSession, n: Int)(f: SparkSession => A): A = {
+  def sized[A](spark: SparkSession, n: Int)(f: SparkSession => A): A =
+    onClone(spark, ShufflePartitions -> n.toString)(f)
+
+  /** Run `f` on a clone of `spark` whose distributed file listings run
+    * at most one task per task slot: the listing parallelism is the
+    * lower of the caller's current value and
+    * `sparkContext.defaultParallelism`. Otherwise as [[sized]]: the
+    * caller's conf is never written and a Dataset `f` returns is rebound
+    * to `spark`.
+    *
+    * Spark lists the paths of a relation in a distributed job once they
+    * exceed `spark.sql.sources.parallelPartitionDiscovery.threshold`
+    * (32), with one task per path up to the parallelism (10,000). Each
+    * task lists a path in milliseconds but first deserializes the
+    * session's Hadoop conf, so tasks beyond the slot count only queue
+    * for a slot and pay that cost again. The listing stays distributed,
+    * as an object store needs; the threshold is left alone, since
+    * raising it would list every path serially on the driver. */
+  def slotListed[A](spark: SparkSession)(f: SparkSession => A): A = {
+    val slots = spark.sparkContext.defaultParallelism
+    val cap = math.min(spark.conf.get(ListingParallelism).toInt, slots)
+    onClone(spark, ListingParallelism -> cap.toString)(f)
+  }
+
+  /** `f` on a clone of `spark` with `kv` set; a Dataset it returns is
+    * rebound to `spark`. */
+  private def onClone[A](spark: SparkSession, kv: (String, String))(f: SparkSession => A): A = {
     val region = Bridge.cloneSession(spark)
-    region.conf.set(ShufflePartitions, n.toString)
+    region.conf.set(kv._1, kv._2)
     f(region) match {
       case ds: Dataset[_] => Bridge.ofSession(spark, ds).asInstanceOf[A]
       case a => a

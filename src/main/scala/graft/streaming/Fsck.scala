@@ -39,7 +39,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *                                filesystems existence IS commit —
   *                                and retire what the newest committed
   *                                snapshot covers);
-  *   - `crashed-staging`        → delete the invisible staging dir;
+  *   - `crashed-staging`        → delete the invisible staging dir, or,
+  *                                for a complete legacy swap staging
+  *                                dir whose target is missing, rename
+  *                                it onto the target (the only copy);
   *   - `lease-break-residue`    → delete the inert `.broken.` sideline.
   *
   * Everything else — the `error` class (stamped-family drift, tombstone
@@ -63,7 +66,21 @@ object StoreFsck {
     * the erase rewrite), which only this audit still reclaims. */
   private def isStaging(name: String): Boolean =
     Seq(StreamingPipeline.StagingPrefix, "_compact_staging_",
-      "_graft_swap_staging_", "_graft_erase_staging_").exists(name.startsWith)
+      SwapStagingPrefix, "_graft_erase_staging_").exists(name.startsWith)
+
+  /** The verify output's swap of the builds before the replace protocol
+    * wrote `_graft_swap_staging_<target>` in full, with `=` written `_`,
+    * then deleted the target and renamed staging onto it: a crash
+    * between the two left the staging dir as the target's only copy. */
+  private val SwapStagingPrefix = "_graft_swap_staging_"
+
+  /** The target a legacy swap staging dir `name` was written for: its
+    * targets were `batch=<id>`, `_pending` and `_dead_letter`. */
+  private def swapTarget(name: String): Option[String] =
+    Option.when(name.startsWith(SwapStagingPrefix)) {
+      val t = name.stripPrefix(SwapStagingPrefix)
+      if (t.startsWith("batch_")) "batch=" + t.stripPrefix("batch_") else t
+    }
 
   final case class Finding(family: String, check: String, severity: String,
                            detail: String, repaired: Boolean = false)
@@ -95,14 +112,16 @@ object StoreFsck {
     }
 
     // a dir carries delta-store state when it holds a delta, a snapshot,
-    // a stamp or a parked dir — the parked dir ALONE too: a crash can
-    // leave a store whose only content is a parked replace (everything
-    // else already retired), and that is exactly when the audit matters
+    // a stamp, a parked dir or a legacy swap staging dir — the last two
+    // ALONE too: a crash can leave a store whose only content is a parked
+    // replace (everything else already retired), or a verify output whose
+    // backlog exists only as swap staging, and that is exactly when the
+    // audit matters
     def carriesStoreState(dir: Path): Boolean = fs.listStatus(dir).exists { c =>
       val n = c.getPath.getName
       StreamingPipeline.DeltaName.findFirstIn(n).isDefined ||
         StreamingPipeline.SnapshotName.findFirstIn(n).isDefined ||
-        StreamingPipeline.parkedTarget(n).isDefined ||
+        StreamingPipeline.parkedTarget(n).isDefined || swapTarget(n).isDefined ||
         n == StreamingPipeline.SchemaMarker || n == StreamingPipeline.FormatMarker
     }
     val rootIsFamily = carriesStoreState(root)
@@ -235,12 +254,28 @@ object StoreFsck {
       }
 
       kids.filter(s => isStaging(s.getPath.getName)).foreach { s =>
-          repairable(Finding(label, "crashed-staging", "info",
-            s"staging dir ${s.getPath.getName} from an interrupted write — " +
-              "invisible to readers; the next sweep overwrites or GC's it")) {
-            fs.delete(s.getPath, true)
-          }
+        val name = s.getPath.getName
+        // a legacy swap staging dir is complete once its write committed
+        val onlyCopy = swapTarget(name).map(new Path(dir, _)).filter { t =>
+          !fs.exists(t) && fs.exists(new Path(s.getPath, "_SUCCESS"))
         }
+        onlyCopy match {
+          case Some(target) =>
+            repairable(Finding(label, "crashed-staging", "warn",
+              s"staging dir $name is the only copy of ${target.getName} — a " +
+                "crashed swap deleted the target before landing it; readers " +
+                "serve without it until repair restores it")) {
+              StreamingPipeline.restoreOrReclaim(fs, s.getPath, target)
+              !fs.exists(s.getPath)
+            }
+          case None =>
+            repairable(Finding(label, "crashed-staging", "info",
+              s"staging dir $name from an interrupted write — " +
+                "invisible to readers; the next sweep overwrites or GC's it")) {
+              fs.delete(s.getPath, true)
+            }
+        }
+      }
 
       val allSnaps = StreamingPipeline.listVersions(spark, dirStr,
         StreamingPipeline.SnapshotName).getOrElse(Seq.empty)

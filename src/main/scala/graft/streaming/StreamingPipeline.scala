@@ -38,10 +38,27 @@ object StreamingPipeline {
       .select(from_json(col("value").cast("string"), schema).as("r"))
       .select(col("r.*"))
 
-  /** File-based streaming source (json/parquet directory). */
+  /** File-based streaming source (json/parquet directory).
+    *
+    * Each micro-batch re-lists its files by path (Spark's
+    * `FileStreamSource.getBatch`); above 32 paths it does so in a
+    * distributed job, by default with one task per file, so a backlog
+    * of 100 files ran 100 tasks that each deserialize the session's
+    * Hadoop conf. The source lists with the session it is built on, not
+    * the query's, so it is built on a [[graft.Sessions.slotListed]]
+    * clone: a listing job runs at most one task per slot. The frame is
+    * rebound to `spark`, so the query still starts on the caller's
+    * `spark.streams` (its listeners and `active` list). The distributed
+    * threshold itself is kept, as raising it would list a backlog
+    * serially on the driver. The clone copies the caller's conf as it
+    * is at this call, so conf the caller sets between this call and the
+    * query's start does not reach how the source lists and splits its
+    * files. */
   def fileSource(spark: SparkSession, path: String, format: String,
                  schema: StructType): DataFrame =
-    spark.readStream.format(format.toLowerCase).schema(schema).load(path)
+    graft.Sessions.slotListed(spark) { s =>
+      s.readStream.format(format.toLowerCase).schema(schema).load(path)
+    }
 
   /** Streaming dataflow: validation-split fan-out per micro-batch.
     * Each micro-batch is persisted once (as one partition when it is
@@ -53,8 +70,12 @@ object StreamingPipeline {
     * `persist` returns only after every write has finished, even when
     * `stop()` interrupts the batch, so no writer of a failed or stopped
     * batch outlives it; the batch's replay after a restart overwrites
-    * each `batch=<id>` directory whole (idempotent). Returns the started
-    * query (caller awaits/stops). */
+    * each `batch=<id>` directory whole (idempotent). A [[fileSource]]
+    * lists a backlog's files with at most one task per slot, so a large
+    * micro-batch does not pay one listing task per file; the listing
+    * stays distributed above Spark's 32-path threshold, which is not
+    * raised, as that would list a backlog serially on the driver.
+    * Returns the started query (caller awaits/stops). */
   def runDataflow(source: DataFrame, conf: DataflowConf,
                   checkpointDir: String,
                   kafkaServer: Option[String] = None,
@@ -1192,6 +1213,17 @@ object StreamingPipeline {
         fs.delete(target, true)
         require(fs.rename(parked, target), s"heal: restore $parked -> $target failed")
       }
+    }
+
+  /** Land the complete staged copy `staged` on `target` when `target`
+    * is missing, else reclaim it: fsck's repair of a staging dir that a
+    * crash of an earlier build's replace left as the only copy of its
+    * target. */
+  private[streaming] def restoreOrReclaim(fs: org.apache.hadoop.fs.FileSystem,
+                                          staged: Path, target: Path): Unit =
+    if (fs.exists(staged)) {
+      if (fs.exists(target)) fs.delete(staged, true)
+      else require(fs.rename(staged, target), s"restore $staged -> $target failed")
     }
 
   /** THE recovery pass of every directory [[replaceDir]] writes into —

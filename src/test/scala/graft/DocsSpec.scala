@@ -101,6 +101,20 @@ class DocsSpec extends AnyFunSuite {
       s"spark.sql.adaptive.coalescePartitions.* set in: ${setters.mkString(", ")}")
   }
 
+  test("only graft.Sessions names a spark.sql.sources.parallelPartitionDiscovery key") {
+    // the stream file source lists with at most one task per slot, a cap
+    // Sessions.slotListed derives; the threshold stays Spark's own.
+    // Matches the key as a literal or as SQLConf's entry.
+    val key = raw"spark\.sql\.sources\.parallelPartitionDiscovery|SQLConf\.PARALLEL_PARTITION_DISCOVERY".r
+    assert(key.findFirstIn("""conf.set("spark.sql.sources.parallelPartitionDiscovery.threshold", "1")""").isDefined)
+    assert(key.findFirstIn("setConf(SQLConf.PARALLEL_PARTITION_DISCOVERY_PARALLELISM, 8)").isDefined)
+    val (home, others) = mainSources.partition(_.endsWith("/graft/Sessions.scala"))
+    assert(home.exists(p => key.findFirstIn(read(p)).isDefined), "the lint no longer sees Sessions' cap")
+    val namers = others.filter(p => key.findFirstIn(read(p)).isDefined)
+    assert(namers.isEmpty,
+      s"spark.sql.sources.parallelPartitionDiscovery.* named outside graft.Sessions in: ${namers.mkString(", ")}")
+  }
+
   test("only StreamingPipeline.scala runs the snapshot-publish protocol") {
     // one copy of the crash protocol: no other file creates a commit
     // marker, renames (Lease.scala's sideline claim aside) or names the

@@ -37,4 +37,25 @@ class SessionsSpec extends SparkSpec {
       assert(Seq(two, three).map(shuffleCounts) == Seq.fill(2)(Seq(before.toInt)))
     } finally cached.unpersist(true)
   }
+
+  test("slotListed caps the clone's listing parallelism at the slots and never writes the caller's") {
+    val key = "spark.sql.sources.parallelPartitionDiscovery.parallelism"
+    val slots = spark.sparkContext.defaultParallelism
+    val before = spark.conf.get(key)
+    assert(before.toInt > slots, "the default must exceed the slots for the cap to show")
+    val df = Sessions.slotListed(spark) { s =>
+      assert(s ne spark)
+      assert(s.conf.get(key) == slots.toString)
+      assert(spark.conf.get(key) == before)
+      s.range(3).toDF("id")
+    }
+    assert(spark.conf.get(key) == before)
+    // the returned frame is the caller's
+    assert(df.sparkSession eq spark)
+    // a lower value the caller set is kept
+    SparkSpec.withConf(spark, key -> "2") {
+      Sessions.slotListed(spark)(s => assert(s.conf.get(key) == "2"))
+      assert(spark.conf.get(key) == "2")
+    }
+  }
 }

@@ -79,6 +79,34 @@ class FsckSpec extends SparkSpec {
     assert(findings(dir).map(_._2) == Seq("clean"))
   }
 
+  test("a legacy swap staging dir that is its target's only copy is restored, not deleted") {
+    // the verify output as a crash of the old swap left it: `_pending`
+    // and `batch=7` deleted after their staging was written in full; the
+    // names are the literal ones that build wrote
+    val out = Files.createTempDirectory("graft_fsck_swap_").toString
+    Seq((1L, 2L, 0.9)).toDF("id_a", "id_b", "jaccard").write.parquet(s"$out/batch=3")
+    Seq((1L, 2L, 0.9), (4L, 5L, 0.8)).toDF("id_a", "id_b", "jaccard")
+      .write.parquet(s"$out/_graft_swap_staging_batch_7")
+    Seq((6L, 7L, 2L)).toDF("id_a", "id_b", "first_seen")
+      .write.parquet(s"$out/_graft_swap_staging__pending")
+    // a swap whose target survived: its staging is residue
+    Seq((8L, 9L, 0.7)).toDF("id_a", "id_b", "jaccard")
+      .write.parquet(s"$out/_graft_swap_staging_batch_3")
+    val f = findings(out)
+    assert(f.count(_ == (("<root>", "crashed-staging", "warn"))) == 2, f.toString)
+    assert(f.count(_ == (("<root>", "crashed-staging", "info"))) == 1, f.toString)
+    val repaired = StoreFsck.fsckStore(spark, out, repair = true)
+      .filter($"check" === "crashed-staging").select($"repaired").as[Boolean].collect()
+    assert(repaired.toSeq == Seq(true, true, true))
+    assert(spark.read.parquet(s"$out/batch=7").count() == 2)
+    assert(StreamingPipeline.pendingCandidates(spark, out)
+      .as[(Long, Long, Long)].collect().toSeq == Seq((6L, 7L, 2L)))
+    assert(spark.read.parquet(s"$out/batch=3").as[(Long, Long, Double)]
+      .collect().toSeq == Seq((1L, 2L, 0.9)))
+    assert(!fs.listStatus(new Path(out)).exists(_.getPath.getName.startsWith("_graft_swap_staging_")))
+    assert(findings(out).map(_._2) == Seq("clean"))
+  }
+
   test("tombstone high-water behind the max delta id is an error; live tombstones are info") {
     val dir = mkStore()
     val tid = StreamingPipeline.writeTombstones(spark, dir, Seq(2L).toDF("id"))

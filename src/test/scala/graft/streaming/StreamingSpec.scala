@@ -118,6 +118,84 @@ class StreamingSpec extends SparkSpec {
     assert(ko.sorted.toSeq == Seq(3L, 13L, 23L))
   }
 
+  test("streaming dataflow: a backlogged micro-batch lists its files with at most one task per slot") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.streaming.StreamingQueryListener
+    import org.apache.spark.sql.streaming.StreamingQueryListener._
+    import org.scalatest.concurrent.Eventually._
+    import org.scalatest.time.SpanSugar._
+    import scala.jdk.CollectionConverters._
+    val in = Files.createTempDirectory("graft_stream_backlog_in_").toString
+    val out = Files.createTempDirectory("graft_stream_backlog_out_").toString
+    val ckpt = Files.createTempDirectory("graft_stream_backlog_ckpt_").toString
+    // 40 files, above the 32 paths from which Spark lists in a job
+    val nFiles = 40
+    (0 until nFiles).foreach { f =>
+      val rows = (0 until 3).map { i =>
+        s"""{"id":${f * 3 + i},"office":"${if (i == 2) "" else "RIO"}"}"""
+      }
+      Files.writeString(java.nio.file.Paths.get(s"$in/f$f.json"), rows.mkString("", "\n", "\n"))
+    }
+    val ddl = "id BIGINT, office STRING"
+    val conf = MetadataReader.parse(s"""{
+      "dataflows": [{
+        "name": "backlog-flow",
+        "sources": [{"name": "in", "path": "$in", "format": "json", "schema": "$ddl"}],
+        "transformations": [
+          {"name": "validation", "type": "validate_fields",
+           "params": {"validations": [{"field": "office", "validations": ["notEmpty"]}]}}
+        ],
+        "sinks": [
+          {"input": "ok_with_date", "name": "ok", "paths": ["$out/ok"],
+           "format": "parquet", "saveMode": "overwrite"},
+          {"input": "validation_ko", "name": "ko", "paths": ["$out/ko"],
+           "format": "json", "saveMode": "overwrite"}
+        ]
+      }]}""").dataflows.head
+    // tasks of each job that lists this test's input files
+    val listingTasks = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+    val jobs = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val desc = Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.description")))
+        if (desc.exists(d => d.startsWith("Listing leaf files") && d.contains(in)))
+          listingTasks.add(e.stageInfos.map(_.numTasks).sum)
+      }
+    }
+    val progressed = new java.util.concurrent.ConcurrentLinkedQueue[java.util.UUID]()
+    val queries = new StreamingQueryListener {
+      override def onQueryStarted(e: QueryStartedEvent): Unit = ()
+      override def onQueryProgress(e: QueryProgressEvent): Unit =
+        if (e.progress.numInputRows > 0) progressed.add(e.progress.id)
+      override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
+    }
+    spark.sparkContext.addSparkListener(jobs)
+    spark.streams.addListener(queries)
+    try {
+      val source = StreamingPipeline.fileSource(spark, in, "json",
+        org.apache.spark.sql.types.StructType.fromDDL(ddl))
+      val q = StreamingPipeline.runDataflow(source, conf, ckpt)
+      try {
+        q.processAllAvailable()
+        // the query runs on the caller's manager, whose listeners see it
+        assert(spark.streams.active.exists(_.id == q.id))
+        eventually(timeout(30.seconds)) { assert(progressed.contains(q.id)) }
+        eventually(timeout(30.seconds)) { assert(!listingTasks.isEmpty) }
+      } finally q.stop()
+    } finally {
+      spark.streams.removeListener(queries)
+      spark.sparkContext.removeSparkListener(jobs)
+    }
+    val slots = spark.sparkContext.defaultParallelism
+    val tasks = listingTasks.asScala.toSeq
+    assert(tasks.forall(_ <= slots), s"listing jobs ran $tasks tasks on $slots slots")
+    // every row lands in exactly one batch=<id> output
+    val landed = Seq(spark.read.parquet(s"$out/ok/ok"), spark.read.json(s"$out/ko/ko"))
+      .map(_.select($"id", $"batch".cast("string"))).reduce(_ union _)
+      .as[(Long, String)].collect().toSeq
+    assert(landed.map(_._1).sorted == (0L until nFiles * 3L))
+    assert(landed.forall(_._2.nonEmpty))
+  }
+
   test("watermarked windowed aggregation matches the batch computation") {
     val dir = eventsDir
     val stream = spark.readStream.schema(Tables.events(spark, sf()).schema).parquet(dir)
